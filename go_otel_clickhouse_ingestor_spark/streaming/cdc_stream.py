@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cdc import parse_envelope, translate_envelope
+from ..operators.cdc import current_state, parse_envelope, translate_envelope
+from .sinks import merge_partitions
 
 
 def translate_stream(kafka_shaped: DataFrame) -> DataFrame:
@@ -112,79 +113,45 @@ def upsert_foreach_batch(state_dir: str, n_buckets: int = N_STATE_BUCKETS):
     Layout: ``versions/`` and ``current/`` are parquet partitioned by
     ``bucket = pmod(xxhash64(id), n_buckets)``.  Each micro-batch:
 
-    1. finds the buckets its ids hash into (bounded by ``n_buckets``),
-    2. reads ONLY those partitions (partition-pruned scan), unions the
-       new rows, dedupes exact replays (idempotent under the
-       at-least-once retry), and
-    3. rewrites ONLY those partitions via dynamic partition overwrite —
-       a poor man's ``MERGE INTO``; untouched buckets are never read
-       or written.
+    1. merges its rows into the ``versions/`` buckets its ids hash into
+       with ``sinks.merge_partitions``, de-duplicating exact replays
+       (idempotent under the at-least-once retry), then
+    2. rewrites the same ``current/`` buckets from the merged versions,
+       and drops the touched buckets left with no live id.
 
-    Crash-safety: versions is updated before current, so a crash
-    between the two leaves a stale-but-consistent current that the next
-    batch's recompute repairs; a crash mid-overwrite of a bucket is
-    repaired by the streaming retry of the same batch (dedup makes the
-    replay idempotent).  A real deployment swaps this file dance for a
-    transactional lake-format MERGE; the bucketing strategy is the same.
+    Versions is written before current, so a crash between the two
+    leaves a stale current that the retry of the batch recomputes.  The
+    crash window inside each overwrite is the one
+    ``sinks.merge_partitions`` documents.
     """
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        from ..operators.cdc import current_state
+    def bucketed(df: DataFrame) -> DataFrame:
+        return df.withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets)))
 
-        batch = batch_df.withColumn(
-            "bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets))
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        merged, touched = merge_partitions(
+            bucketed(batch_df), state_dir + "/versions", "bucket", DataFrame.dropDuplicates
         )
-        touched = [r.bucket for r in batch.select("bucket").distinct().collect()]
         if not touched:
             return
-        versions_dir = state_dir + "/versions"
-        from pyspark.errors import AnalysisException
-
-        try:
-            existing = spark.read.parquet(versions_dir).filter(
-                F.col("bucket").isin(touched)
-            )
-        except AnalysisException as exc:
-            # ONLY the missing-path case means "no prior state" (first
-            # batch).  Any other failure (transient IO, corrupt footer,
-            # schema drift) must propagate so Structured Streaming
-            # retries the batch — swallowing it would dynamic-overwrite
-            # the touched buckets with batch-only rows: permanent state
-            # loss instead of a retryable error.
-            cls = exc.getErrorClass() or ""
-            if "PATH_NOT_FOUND" not in cls and "UNABLE_TO_INFER_SCHEMA" not in cls:
-                raise
-            existing = None
-        merged = existing.unionByName(batch) if existing is not None else batch
-        # localCheckpoint: materializes the merged buckets and cuts the
-        # lineage back to versions_dir, so the overwrite below is not
-        # reading the path it writes.
-        merged = merged.dropDuplicates().localCheckpoint(eager=True)
-
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        cur = bucketed(current_state(merged))
+        (
+            cur.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(state_dir + "/current")
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy("bucket").parquet(versions_dir)
-            cur = current_state(merged).withColumn(
-                "bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets))
-            )
-            cur.write.mode("overwrite").partitionBy("bucket").parquet(
-                state_dir + "/current"
-            )
-            # Dynamic overwrite only replaces partitions PRESENT in the
-            # written data: a touched bucket whose last live id was just
-            # deleted produces no current rows, so its stale partition
-            # must be dropped explicitly.  (A lake-format MERGE/DELETE
-            # subsumes this.)
-            import shutil
-
-            live = {r.bucket for r in cur.select("bucket").distinct().collect()}
-            for b in set(touched) - live:
-                shutil.rmtree(f"{state_dir}/current/bucket={b}", ignore_errors=True)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        # Dynamic overwrite only replaces partitions PRESENT in the
+        # written data: a touched bucket whose last live id was just
+        # deleted produces no current rows, so its stale partition is
+        # dropped explicitly, through the FileSystem of the path's
+        # scheme.  A failed delete raises, so the batch retries.
+        sc = batch_df.sparkSession.sparkContext
+        live = {r.bucket for r in cur.select("bucket").distinct().collect()}
+        for b in sorted(set(touched) - live):
+            p = sc._jvm.org.apache.hadoop.fs.Path(f"{state_dir}/current/bucket={b}")
+            fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+            if not fs.delete(p, True) and fs.exists(p):
+                raise OSError(f"could not delete stale partition {p}")
 
     return apply

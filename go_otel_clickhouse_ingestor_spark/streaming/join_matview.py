@@ -27,12 +27,13 @@ multi-table topology the reference's envelope already uses,
   state — same argument as the near-dup index's foreachBatch face:
   this state must outlive the query and serve batch readers anyway.
 
-Exactly-once: like ``matview_foreach_batch``, appends replayed after a
-crash between view-append and acc-append could double rows; the
-checkpoint's batch-id dedup makes foreachBatch re-deliver a batch only
-after a failure before the commit, and the pytest contract checks the
-maintained view row-equals the batch join of the full inputs after a
-multi-trigger run (tests/test_streaming_join_matview.py).
+Delivery: at-least-once.  The accumulated sides are read with
+``sinks.read_partitions`` (the scan behind ``sinks.merge_partitions``),
+but the view and both sides only APPEND, so a batch replayed after a
+crash between its appends can duplicate rows.  The pytest
+contract checks the maintained view row-equals the batch join of the
+full inputs after a multi-trigger run
+(tests/test_streaming_join_matview.py).
 """
 
 from __future__ import annotations
@@ -40,30 +41,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sinks import read_partitions
+
 #: custkey-bucket fanout of the accumulated sides.  16 at fixture
 #: scale; at 100 TB this is the lake table's bucket/partition spec —
 #: the delta-join prune ratio is 1/buckets per touched key.
 N_BUCKETS = 16
 
-_A_SCHEMA = "o_orderkey long, o_custkey long, o_totalprice double"
-_B_SCHEMA = "c_custkey long, c_name string, c_mktsegment string"
-
 
 def _bucket(key):
     return F.pmod(key, F.lit(N_BUCKETS))
-
-
-def _read_side(spark, path: str, schema: str) -> DataFrame:
-    """Accumulated side as of the previous batch; empty-typed frame
-    before the first append (the matview PATH_NOT_FOUND discipline)."""
-    import os
-
-    if not os.path.exists(path):
-        return spark.createDataFrame([], schema + ", bucket int")
-    return spark.read.schema(
-        # partition column comes back from the directory layout
-        schema + ", bucket int"
-    ).parquet(path)
 
 
 def join_matview_foreach_batch(state_dir: str):
@@ -80,29 +67,28 @@ def join_matview_foreach_batch(state_dir: str):
     never join against its own half-appended state)."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         spark = batch_df.sparkSession
-        da = (
-            batch_df.filter(F.col("side") == "a")
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .withColumn("bucket", _bucket(F.col("o_custkey")).cast("int"))
+        key = F.when(F.col("side") == "a", F.col("o_custkey")).otherwise(F.col("c_custkey"))
+        # the delta is read 3×; one checkpoint and one bucket collect
+        # serve both sides
+        delta = batch_df.withColumn("bucket", _bucket(key).cast("int")).localCheckpoint(eager=True)
+        touched = delta.select("side", "bucket").distinct().collect()
+        a_buckets = [r.bucket for r in touched if r.side == "a"]
+        b_buckets = [r.bucket for r in touched if r.side == "b"]
+        da = delta.filter(F.col("side") == "a").select(
+            "o_orderkey", "o_custkey", "o_totalprice", "bucket"
         )
-        db = (
-            batch_df.filter(F.col("side") == "b")
-            .select("c_custkey", "c_name", "c_mktsegment")
-            .withColumn("bucket", _bucket(F.col("c_custkey")).cast("int"))
+        db = delta.filter(F.col("side") == "b").select(
+            "c_custkey", "c_name", "c_mktsegment", "bucket"
         )
-        da = da.localCheckpoint(eager=True)  # the delta is read 3×
-        db = db.localCheckpoint(eager=True)
-        a_old = _read_side(spark, f"{state_dir}/a_acc", _A_SCHEMA)
-        b_old = _read_side(spark, f"{state_dir}/b_acc", _B_SCHEMA)
-
         # bucket prune: the history side is scanned ONLY in the
-        # partitions the delta touches (tiny literal IN list — buckets
-        # are bounded by N_BUCKETS, not by the batch)
-        a_buckets = [r.bucket for r in da.select("bucket").distinct().collect()]
-        b_buckets = [r.bucket for r in db.select("bucket").distinct().collect()]
+        # partitions the delta touches (a literal list bounded by
+        # N_BUCKETS, not by the batch)
+        b_old = a_old = None
+        if a_buckets:
+            b_old = read_partitions(spark, f"{state_dir}/b_acc", "bucket", a_buckets)
+        if b_buckets:
+            a_old = read_partitions(spark, f"{state_dir}/a_acc", "bucket", b_buckets)
 
         on = F.col("o_custkey") == F.col("c_custkey")
         cols = [
@@ -113,20 +99,10 @@ def join_matview_foreach_batch(state_dir: str):
             "c_mktsegment",
         ]
         parts = []
-        if a_buckets:
-            parts.append(
-                da.join(
-                    b_old.filter(F.col("bucket").isin(a_buckets)).drop("bucket"),
-                    on,
-                ).select(*cols)
-            )
-        if b_buckets:
-            parts.append(
-                a_old.filter(F.col("bucket").isin(b_buckets))
-                .drop("bucket")
-                .join(db, on)
-                .select(*cols)
-            )
+        if b_old is not None:
+            parts.append(da.join(b_old.drop("bucket"), on).select(*cols))
+        if a_old is not None:
+            parts.append(a_old.drop("bucket").join(db, on).select(*cols))
         if a_buckets and b_buckets:
             parts.append(da.join(db.drop("bucket"), on).select(*cols))
         if parts:

@@ -14,18 +14,18 @@ micro-batch only needs:
    partitions.
 
 State is O(view), not O(stream): the raw events are never re-read.
-This is the same id-bucketed MERGE discipline as
-``cdc_stream.upsert_foreach_batch`` (A16) applied to additive
-aggregation — at 100 TB the view partitions by (event_type, day) and a
-batch rewrites only the slivers it touched.  A transactional
-lake-format MERGE replaces the file dance in production; the
-incremental-combine strategy is identical.
+This is the same partition merge as ``cdc_stream.upsert_foreach_batch``
+(A16), ``sinks.merge_partitions``, applied to additive aggregation; its
+crash window is documented there.  At 100 TB the view partitions by
+(event_type, day) and a batch rewrites only the slivers it touched.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .sinks import merge_partitions
 
 
 def hourly_rollup(batch_df: DataFrame) -> DataFrame:
@@ -42,45 +42,21 @@ def hourly_rollup(batch_df: DataFrame) -> DataFrame:
     )
 
 
+def _resum(rows: DataFrame) -> DataFrame:
+    return rows.groupBy("event_type", "bucket_us").agg(
+        F.sum("n").alias("n"), F.sum("total_value").alias("total_value")
+    )
+
+
 def matview_foreach_batch(view_dir: str):
     """foreachBatch maintainer: combine each micro-batch's partial
-    aggregate into the stored view, rewriting only touched event_type
-    partitions.  Replays of the same batch are NOT idempotent for
-    additive aggregates — exactly-once for this sink comes from the
-    checkpoint's batch-id dedup (foreachBatch re-delivers a batch only
-    after a failure BEFORE the checkpoint commit, and the overwrite of
-    the touched partitions is atomic per partition), the same
-    guarantee Structured Streaming documents for idempotent sinks.
-    """
+    aggregate into the stored view with ``sinks.merge_partitions``,
+    rewriting only touched event_type partitions.  Replays of the same
+    batch are NOT idempotent for additive aggregates: a batch
+    re-delivered after its overwrite committed but before the
+    checkpoint did is counted twice."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = hourly_rollup(batch_df)
-        touched = [r.event_type for r in partial.select("event_type").distinct().collect()]
-        if not touched:
-            return
-        from pyspark.errors import AnalysisException
-
-        try:
-            existing = spark.read.parquet(view_dir).filter(
-                F.col("event_type").isin(touched)
-            )
-        except AnalysisException as exc:
-            cls = exc.getErrorClass() or ""
-            if "PATH_NOT_FOUND" not in cls and "UNABLE_TO_INFER_SCHEMA" not in cls:
-                raise
-            existing = None
-        merged = partial if existing is None else existing.unionByName(partial)
-        combined = (
-            merged.groupBy("event_type", "bucket_us")
-            .agg(F.sum("n").alias("n"), F.sum("total_value").alias("total_value"))
-            .localCheckpoint(eager=True)  # cut self-referential lineage pre-overwrite
-        )
-        (
-            combined.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("event_type")
-            .parquet(view_dir)
-        )
+        merge_partitions(hourly_rollup(batch_df), view_dir, "event_type", _resum)
 
     return apply

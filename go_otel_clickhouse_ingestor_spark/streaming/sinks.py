@@ -1,5 +1,6 @@
 """Sinks — the reference's ClickHouse HTTP JSONEachRow sink (A11/A12)
-as micro-batched JDBC, plus a parquet sink for tests.
+as micro-batched JDBC, a parquet sink for tests, and the partition
+merge every stateful foreachBatch maintainer shares.
 
 Reference behavior being replaced: one synchronous HTTP POST *per
 row*, new http.Client per call, non-200 -> error, basic auth only when
@@ -12,8 +13,12 @@ delivery than the reference's log-and-drop (``cdc.go:76-80``).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -99,3 +104,60 @@ def _traced_write(tracer, write, batch_df: DataFrame, batch_id: int, target: str
 
     with tracer.span(SPAN_CLICKHOUSE_POST, batch_id=batch_id, table=target):
         write()
+
+
+def read_partitions(spark: SparkSession, path: str, col: str, values: list):
+    """The partitions ``col IN values`` of the parquet table at ``path``
+    (a partition-pruned scan), or ``None`` while the table does not
+    exist yet.  Only the missing-path case means "no prior state": any
+    other failure (transient IO, corrupt footer, schema drift) raises,
+    so Structured Streaming retries the batch instead of a caller
+    overwriting the partitions with the batch's rows alone."""
+    # null-safe: a null value is the __HIVE_DEFAULT_PARTITION__ partition
+    keep = reduce(lambda acc, v: acc | F.col(col).eqNullSafe(v), values, F.lit(False))
+    try:
+        return spark.read.parquet(path).filter(keep)
+    except AnalysisException as exc:
+        cls = exc.getCondition() or ""
+        if "PATH_NOT_FOUND" not in cls and "UNABLE_TO_INFER_SCHEMA" not in cls:
+            raise
+        return None
+
+
+def merge_partitions(
+    delta: DataFrame, path: str, col: str, combine: Callable[[DataFrame], DataFrame]
+) -> tuple[DataFrame, list]:
+    """Merge ``delta`` into the parquet table at ``path``, partitioned by
+    ``col``, rewriting only the partitions ``delta`` touches — a poor
+    man's ``MERGE INTO``; untouched partitions are never read or
+    written.  Returns the merged rows of the touched partitions and the
+    touched ``col`` values (``[]`` for an empty delta, which writes
+    nothing).
+
+    ``combine`` maps (existing rows ∪ delta) of the touched partitions
+    to their new contents; the result is localCheckpointed so the
+    overwrite does not read the path it writes.  The overwrite uses the
+    per-write ``partitionOverwriteMode=dynamic`` option, never the
+    session-wide conf another query may be changing.
+
+    Crash safety: a failure before the write's job commit leaves every
+    partition as it was, so the batch's retry redoes the merge.  The
+    commit itself is not atomic: per touched partition it deletes the
+    live directory and then renames the staged one into place.  A crash
+    between the two leaves that partition missing, and the retry reads
+    it as empty, so its earlier rows are lost.  A transactional
+    lake-format MERGE closes that window; the partition strategy is the
+    same."""
+    touched = [r[col] for r in delta.select(col).distinct().collect()]
+    if not touched:
+        return delta, touched
+    existing = read_partitions(delta.sparkSession, path, col, touched)
+    merged = delta if existing is None else existing.unionByName(delta)
+    merged = combine(merged).localCheckpoint(eager=True)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(path)
+    )
+    return merged, touched

@@ -388,6 +388,50 @@ def test_upsert_incremental_rewrites_only_touched_buckets(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "file_uri"])
+def test_upsert_deleting_last_live_id_empties_its_current_bucket(spark, tmp_path, uri):
+    """A batch that deletes the only live id of a bucket must drop that
+    bucket from ``current/`` (dynamic overwrite alone keeps it), also
+    when the state dir is a URI rather than a plain path."""
+    from go_otel_clickhouse_ingestor_spark.operators.cdc import (
+        parse_envelope,
+        translate_envelope,
+    )
+    from go_otel_clickhouse_ingestor_spark.sources.fixtures import _env, _user
+    from go_otel_clickhouse_ingestor_spark.streaming.cdc_stream import (
+        N_STATE_BUCKETS,
+        upsert_foreach_batch,
+    )
+
+    buckets = {
+        r.id: r.b
+        for r in spark.createDataFrame([(7,), (8,)], "id long")
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(N_STATE_BUCKETS)).alias("b"))
+        .collect()
+    }
+    assert buckets[7] != buckets[8], "ids 7 and 8 must hash to different buckets"
+
+    def batch(*msgs):
+        raw = spark.createDataFrame(
+            [(m, json.dumps({"id": i}), v) for m, i, v in msgs],
+            "msg_id long, key string, value string",
+        )
+        return translate_envelope(parse_envelope(raw))
+
+    state = ("file://" if uri else "") + str(tmp_path / "state")
+    apply_batch = upsert_foreach_batch(state)
+    apply_batch(batch((1, 7, _env("c", after=_user(7, "Ed", "ed@x"), lsn=1, ts_us=1))), 0)
+    apply_batch(
+        batch(
+            (2, 7, _env("d", before=_user(7, "", ""), lsn=2, ts_us=2)),
+            (3, 8, _env("c", after=_user(8, "Fi", "fi@x"), lsn=3, ts_us=3)),
+        ),
+        1,
+    )
+    current = spark.read.parquet(state + "/current")
+    assert sorted(r.id for r in current.collect()) == [8]
+
+
 def test_stream_static_enrich(spark, events_stream):
     from go_otel_clickhouse_ingestor_spark.streaming.windows import enrich_with_users
 

@@ -87,3 +87,14 @@ def test_join_matview_matches_batch_join_across_triggers(spark, sf_dir, tmp_path
         + o1.join(c2, o1.o_custkey == c2.c_custkey).count()
     )
     assert n_cross > 0
+
+
+def test_join_matview_pairs_across_batches_under_file_uri(spark, tmp_path):
+    """The accumulated sides are found through the state dir's URI: a
+    customer in batch 0 joins their order arriving in batch 1."""
+    state = "file://" + str(tmp_path / "state")
+    apply_batch = join_matview_foreach_batch(state)
+    apply_batch(spark.createDataFrame([("b", None, None, None, 1, "c1", "X")], _FEED_SCHEMA), 0)
+    apply_batch(spark.createDataFrame([("a", 10, 1, 5.0, None, None, None)], _FEED_SCHEMA), 1)
+    got = [tuple(r) for r in spark.read.parquet(f"{state}/view").collect()]
+    assert got == [(10, 1, 5.0, "c1", "X")]
