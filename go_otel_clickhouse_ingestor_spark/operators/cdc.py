@@ -11,10 +11,22 @@ streaming pipeline reuses these very functions on a Kafka source).
 Branch map (reference -> expression):
 
 - ``tryUnmarshalEnvelope`` direct/stringified/corrupt (cdc.go:87-98)
-  -> ``get_json_object(value, '$')`` normalizes one level of double
-  encoding and nulls out corrupt input, then ``from_json``.
-- malformed-record drop (cdc.go:63-67) -> filter on normalized JSON
-  being an object.
+  -> one ``from_json`` per message.  Only a value whose first non-blank
+  character is ``"`` is unquoted first, by ``get_json_object(value,
+  '$')`` (Go's second Unmarshal); every other value goes to
+  ``from_json`` as it is.
+- malformed-record drop (cdc.go:63-67) -> ``parse_ok``: the parse is
+  an object and its corrupt-record field is NULL.  PERMISSIVE
+  ``from_json`` keeps the fields it read before a syntax error, so a
+  half-parsed struct is never taken as success.  Strict options make
+  the grammar Go's: no single quotes, no NaN/Infinity, no comments,
+  no leading zeros, no raw control characters in strings; a value that
+  does not fit its field type (``"id":"five"``) is corrupt too.
+- Known gap: bytes after the top-level value (``{...} x``,
+  ``{...}{...}``) are ignored by ``from_json`` but fail Go's decode;
+  ``tests/test_cdc_properties.py`` carries them as strict xfails.
+- The keep/drop decision leaves through a generator (:func:`rows_where`)
+  so predicate pushdown cannot copy the parse into a Filter below it.
 - c/u takes ``after``, missing after drops (cdc.go:113-123)
 - d takes id from ``before.id`` if != 0 else Kafka key, unparseable
   key -> 0 (cdc.go:125-134)
@@ -52,24 +64,57 @@ ENVELOPE_SCHEMA = (
 )
 
 
-def normalized_json(value: Column) -> Column:
-    """One-level JSON normalization (cdc.go:87-98): direct object JSON
-    passes through, a stringified envelope is unquoted, corrupt input
-    becomes NULL.  ``get_json_object(x, '$')`` does all three."""
-    return F.get_json_object(value, "$")
+#: Field ``from_json`` fills with the raw text of a record it could not
+#: parse (the struct keeps whatever it read before the error).
+CORRUPT_FIELD = "_corrupt_record"
+
+#: ``from_json`` options that narrow Jackson's grammar to Go's
+#: encoding/json.  Comments, leading zeros and raw control characters
+#: are already off by default.
+_STRICT_JSON = {
+    "columnNameOfCorruptRecord": CORRUPT_FIELD,
+    "allowSingleQuotes": "false",
+    "allowNonNumericNumbers": "false",
+}
+
+#: JSON's insignificant whitespace (RFC 8259 section 2).
+_JSON_WS = " \t\n\r"
 
 
-def parse_envelope(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """Attach ``env`` (parsed envelope struct) and ``parse_ok``.
+def parse_envelope(
+    df: DataFrame, value_col: str = "value", schema: str = ENVELOPE_SCHEMA
+) -> DataFrame:
+    """Attach ``env`` (the envelope parsed with ``schema``, plus
+    :data:`CORRUPT_FIELD`) and ``parse_ok``, with one ``from_json`` per
+    message.
 
-    ``parse_ok`` mirrors Go's tryUnmarshalEnvelope success: the payload
-    (after at most one unquoting) must be a JSON *object* — scalars and
-    arrays fail Go's struct unmarshal just like garbage does."""
-    norm = normalized_json(F.col(value_col))
-    is_obj = norm.isNotNull() & F.ltrim(norm).startswith("{")
-    return df.withColumn("parse_ok", is_obj).withColumn(
-        "env", F.from_json(F.when(is_obj, norm), ENVELOPE_SCHEMA)
+    A value whose first non-blank character is ``"`` is a stringified
+    envelope (cdc.go:92-97) and is unquoted by ``get_json_object``
+    first; nothing else is.  ``parse_ok`` mirrors Go's
+    tryUnmarshalEnvelope success: the text parses cleanly, under the
+    Go-strict options of ``_STRICT_JSON``, as a JSON *object* whose
+    fields fit ``schema`` (scalars, arrays, ``null``, a third level of
+    quoting, type mismatches and garbage all fail).  Trailing bytes
+    after the object are not detected (see the module docstring)."""
+    value = F.col(value_col)
+    quoted = F.ltrim(value, F.lit(_JSON_WS)).startswith('"')
+    text = F.when(quoted, F.get_json_object(value, "$")).otherwise(value)
+    env = F.from_json(text, f"{schema}, {CORRUPT_FIELD} string", _STRICT_JSON)
+    return df.withColumn("env", env).withColumn(
+        "parse_ok",
+        F.col("env").isNotNull() & F.col("env").getField(CORRUPT_FIELD).isNull(),
     )
+
+
+def rows_where(df: DataFrame, keep: Column, *cols) -> DataFrame:
+    """``df.filter(keep).select(*cols)`` without a Filter node.
+
+    Predicate pushdown moves a Filter over the parsed ``env`` below the
+    Project that parsed it and copies the ``from_json`` into the
+    predicate: two parses per message.  A generator is a barrier to that
+    pushdown, so rows leave through ``inline`` of a zero- or
+    one-element array."""
+    return df.select(F.inline(F.when(keep, F.array(F.struct(*cols)))))
 
 
 def translate_envelope(df: DataFrame, key_col: str = "key") -> DataFrame:
@@ -91,7 +136,9 @@ def translate_envelope(df: DataFrame, key_col: str = "key") -> DataFrame:
     is_cu = op.isin("c", "u") & after.isNotNull()
     is_d = op == "d"
 
-    out = df.filter(F.col("parse_ok") & (is_cu | is_d)).select(
+    return rows_where(
+        df,
+        F.col("parse_ok") & (is_cu | is_d),
         "msg_id",
         F.when(is_cu, F.coalesce(after.getField("id"), F.lit(0)))
         .otherwise(del_id)
@@ -109,7 +156,6 @@ def translate_envelope(df: DataFrame, key_col: str = "key") -> DataFrame:
             F.timestamp_micros(env.getField("ts_us")), F.timestamp_micros(F.lit(0))
         ).alias("_ts"),
     )
-    return out
 
 
 def current_state(users_cur: DataFrame) -> DataFrame:
@@ -470,27 +516,22 @@ def cdc_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline restart."""
     from ..sources.fixtures import cdc_messages_all_df
 
-    df = parse_envelope(cdc_messages_all_df(spark))
-    # Re-parse with the widened schema: same normalization, wider struct.
-    norm = normalized_json(F.col("value"))
-    env2 = F.from_json(F.when(F.col("parse_ok"), norm), ENVELOPE_SCHEMA_V2)
-    after = env2.getField("after")
-    op = env2.getField("op")
-    return (
-        df.withColumn("env2", env2)
-        .filter(F.col("parse_ok") & op.isin("c", "u") & after.isNotNull())
-        .select(
-            "msg_id",
-            op.alias("op"),
-            after.getField("id").alias("id"),
-            F.coalesce(after.getField("name"), F.lit("")).alias("name"),
-            F.coalesce(after.getField("phone"), F.lit("")).alias("phone"),
-            after.getField("phone").isNotNull().alias("has_phone"),
-            F.coalesce(
-                env2.getField("source").getField("version"),
-                F.lit("pre-versioning"),
-            ).alias("src_version"),
-        )
+    env = F.col("env")
+    after = env.getField("after")
+    op = env.getField("op")
+    return rows_where(
+        parse_envelope(cdc_messages_all_df(spark), schema=ENVELOPE_SCHEMA_V2),
+        F.col("parse_ok") & op.isin("c", "u") & after.isNotNull(),
+        "msg_id",
+        op.alias("op"),
+        after.getField("id").alias("id"),
+        F.coalesce(after.getField("name"), F.lit("")).alias("name"),
+        F.coalesce(after.getField("phone"), F.lit("")).alias("phone"),
+        after.getField("phone").isNotNull().alias("has_phone"),
+        F.coalesce(
+            env.getField("source").getField("version"),
+            F.lit("pre-versioning"),
+        ).alias("src_version"),
     )
 
 

@@ -64,6 +64,7 @@ _DRIVER_RECHECK: list[str] = [
     "cluster_kmeans_assign",
     "dedup_semantic",
     "graph_pagerank",
+    "dq_functional_dependencies",
     # r15 verdict ask #6: shared gram kernel changed in r15 while this
     # name sat outside the window, plus the r15 window-rotated greens
     "dedup_near_incremental",

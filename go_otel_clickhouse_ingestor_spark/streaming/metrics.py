@@ -145,31 +145,32 @@ def serve_metrics(
 OBSERVATION_NAME = "ingestion"
 
 
+def _ingest_counters(df):
+    """The observation's aggregates: total rows and malformed rows (null
+    ``id`` after envelope decode — the engine-side analog of the
+    reference's insert errors, ``internal/metrics/metrics.go:24-28``;
+    always 0 for a frame without an ``id`` column)."""
+    from pyspark.sql import functions as F
+
+    malformed = (
+        F.count(F.when(F.col("id").isNull(), 1))
+        if "id" in df.columns
+        else F.count(F.lit(None))
+    )
+    return F.count(F.lit(1)).alias("rows_total"), malformed.alias("rows_malformed")
+
+
 def with_ingest_observation(df):
-    """Attach the reference's ingest counters to a BATCH DataFrame as a
-    named observation: total rows and malformed rows (null after
-    envelope decode — the engine-side analog of the reference's insert
-    errors, ``internal/metrics/metrics.go:24-28``).
+    """Attach the reference's ingest counters (:func:`_ingest_counters`)
+    to a BATCH DataFrame as a named observation.
 
     Returns ``(df, observation)``; read ``observation.get`` AFTER the
     first action on ``df``.  The aggregates ride the existing plan —
     zero extra passes."""
     from pyspark.sql import Observation
-    from pyspark.sql import functions as F
 
-    cols = set(df.columns)
-    err = (
-        F.count(F.when(F.col("id").isNull(), 1))
-        if "id" in cols
-        else F.count(F.lit(None))
-    )
     obs = Observation(OBSERVATION_NAME)
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_total"),
-        err.alias("rows_malformed"),
-    )
-    return observed, obs
+    return df.observe(obs, *_ingest_counters(df)), obs
 
 
 def observe_stream(df):
@@ -177,13 +178,7 @@ def observe_stream(df):
     ``Observation`` class is batch-only); each micro-batch's values
     arrive in ``QueryProgressEvent.observedMetrics['ingestion']`` and
     ``IngestionMetricsListener`` folds them into the counters."""
-    from pyspark.sql import functions as F
-
-    return df.observe(
-        OBSERVATION_NAME,
-        F.count(F.lit(1)).alias("rows_total"),
-        F.count(F.lit(None)).alias("rows_malformed"),
-    )
+    return df.observe(OBSERVATION_NAME, *_ingest_counters(df))
 
 
 def _fold_observed(listener: IngestionMetricsListener, progress) -> None:

@@ -16,7 +16,9 @@ are objects or null, as Debezium emits them.
 from __future__ import annotations
 
 import json
+import re
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -168,3 +170,119 @@ def test_translation_matches_python_reference(spark, msgs):
         if (row := ref_translate(i, k, v)) is not None
     }
     assert got == want
+
+
+# ------------------------------------------------ Go edge semantics
+
+_GOOD = (
+    '{"op":"c","after":{"id":5,"name":"a","email":"e"},'
+    '"source":{"lsn":3},"ts_us":7}'
+)
+#: The users_cur row of ``_GOOD``: (id, name, email, is_deleted, _op,
+#: _lsn, ts_us).
+_GOOD_ROW = (5, "a", "e", 0, 1, 3, 7)
+_TRAILING = (
+    "from_json ignores bytes after the top-level value; Go's decoder, "
+    "DuckDB json_valid and Python json.loads reject them"
+)
+
+#: (case id, value, kept by Go's tryUnmarshalEnvelope + translate,
+#: xfail reason).  Python's json.loads accepts NaN, so the expectation
+#: is written out here rather than taken from ``ref_translate``.
+_EDGES = [
+    ("direct", _GOOD, True, None),
+    ("double_encoded", json.dumps(_GOOD), True, None),
+    ("leading_ws_direct", " \n\t\r" + _GOOD, True, None),
+    ("leading_ws_double_encoded", "\t \n" + json.dumps(_GOOD), True, None),
+    ("truncated_after_op", '{"op":"c","after":{"id":5,"na', False, None),
+    ("double_encoded_truncated", json.dumps('{"op":"c","after":{"id":5,"na'), False, None),
+    ("triple_encoded", json.dumps(json.dumps(_GOOD)), False, None),
+    ("array_wrapped", "[" + _GOOD + "]", False, None),
+    ("null", "null", False, None),
+    ("empty_object", "{}", False, None),
+    ("json_comment", "/* c */" + _GOOD, False, None),
+    ("leading_zero_lsn_delete", '{"op":"d","before":{"id":5},"source":{"lsn":07}}', False, None),
+    ("nan", '{"op":"c","after":{"id":5,"name":"a","email":"e"},"x":NaN}', False, None),
+    ("single_quoted", "{'op':'c','after':{'id':5,'name':'a','email':'e'}}", False, None),
+    ("control_char_in_string", _GOOD.replace('"a"', '"a\x01b"'), False, None),
+    ("control_char_double_encoded", json.dumps(_GOOD.replace('"a"', '"a\x01b"')), False, None),
+    ("id_type_mismatch", _GOOD.replace('"id":5', '"id":"five"'), False, None),
+    ("trailing_garbage", _GOOD + " x", False, _TRAILING),
+    ("trailing_object", _GOOD + _GOOD, False, _TRAILING),
+    ("double_encoded_trailing_garbage", json.dumps(_GOOD) + " x", False, _TRAILING),
+]
+
+
+@pytest.fixture(scope="module")
+def edge_rows(spark):
+    """msg_id -> translated row for every ``_EDGES`` value, in one job."""
+    from go_otel_clickhouse_ingestor_spark.streaming.cdc_stream import translate_stream
+
+    df = spark.createDataFrame(
+        [(i, '{"id": 9}', v) for i, (_, v, _, _) in enumerate(_EDGES)],
+        "msg_id long, key string, value string",
+    )
+    cols = ["id", "name", "email", "is_deleted", "_op", "_lsn", F.unix_micros("_ts")]
+    return {r[0]: tuple(r[1:]) for r in translate_stream(df).select("msg_id", *cols).collect()}
+
+
+@pytest.mark.parametrize(
+    "msg_id, kept",
+    [
+        pytest.param(
+            i, kept, id=name,
+            marks=[pytest.mark.xfail(strict=True, reason=why)] if why else [],
+        )
+        for i, (name, _, kept, why) in enumerate(_EDGES)
+    ],
+)
+def test_translation_matches_go_on_edge_inputs(edge_rows, msg_id, kept):
+    assert edge_rows.get(msg_id) == (_GOOD_ROW if kept else None)
+
+
+# ------------------------------------------------------- plan guard
+
+
+def _call_args(plan: str, fn: str) -> list[str]:
+    """Argument text of every ``fn(...)`` call in a plan string."""
+    out = []
+    for m in re.finditer(re.escape(fn) + r"\(", plan):
+        depth, i = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        out.append(plan[m.end() : i - 1])
+    return out
+
+
+def test_translate_stream_parses_each_value_once(spark, tmp_path):
+    """The executed plan of ``translate_stream`` over a JSON file source
+    holds ONE ``from_json`` over ``value`` (the ``key`` parse of deletes
+    aside), and ``get_json_object`` only under the quote-prefix guard:
+    no Filter that predicate pushdown turned into a second parse."""
+    from go_otel_clickhouse_ingestor_spark.streaming.cdc_stream import translate_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "part-0.json").write_text(
+        "\n".join(
+            json.dumps({"msg_id": i, "key": '{"id": 5}', "value": v})
+            for i, v in enumerate([_GOOD, json.dumps(_GOOD), "not json"])
+        )
+    )
+    df = translate_stream(spark.read.schema("msg_id long, key string, value string").json(str(src)))
+    assert df.count() == 2
+    plan = df._jdf.queryExecution().executedPlan().toString()
+
+    parses = _call_args(plan, "from_json")
+    over_value = [a for a in parses if re.search(r"\bvalue#\d+", a)]
+    assert len(over_value) == 1, plan
+    assert all(re.search(r"\bkey#\d+", a) for a in parses if a not in over_value), plan
+
+    unquotes = len(_call_args(plan, "get_json_object"))
+    guarded = re.findall(
+        r"CASE WHEN StartsWith\(ltrim\(value#\d+, Some\([^)]*\)\), \"\) "
+        r"THEN get_json_object\(value#\d+, \$\)",
+        plan,
+    )
+    assert unquotes == len(guarded) == 1, plan

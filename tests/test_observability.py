@@ -267,9 +267,12 @@ def test_streaming_observed_metrics_reach_listener(spark, tmp_path):
     _fold_observed(lis, prog)
     assert lis.insert_errors_total == 3
 
-    # end-to-end: a real streaming query carries the named observation
+    # end-to-end: a real streaming query carries the named observation,
+    # with the same malformed rule (null id) as the batch path
     src = str(tmp_path / "src")
-    spark.range(25).select(F.col("id")).write.mode("overwrite").parquet(src)
+    spark.range(25).select(
+        F.when(F.col("id") % 5 != 0, F.col("id")).alias("id")
+    ).write.mode("overwrite").parquet(src)
     seen: list[dict] = []
 
     class Capture(IngestionMetricsListener):
@@ -298,3 +301,4 @@ def test_streaming_observed_metrics_reach_listener(spark, tmp_path):
         spark.streams.removeListener(cap)
     assert seen, "no observed metrics arrived in the listener"
     assert sum(m["rows_total"] for m in seen) == 25
+    assert sum(m["rows_malformed"] for m in seen) == 5

@@ -167,6 +167,37 @@ def test_close_round_stageable_paths_exact_matching():
     ], got
 
 
+def test_close_round_requeues_red_rechecks_and_reads_whole_literal():
+    """A re-check name leaves _DRIVER_RECHECK only when the newest
+    CORRECTNESS entry is GREEN (a red or missing re-verification stays
+    queued), and the literal rewrite spans the whole list even when a
+    comment inside it holds a ``]`` (ADVICE r16)."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from close_round import list_literal_re, requeued
+
+    newest = {
+        "hashed": {"hash_match": True},
+        "rows_ok": {"err": None, "rows_match": True, "schema_match": True},
+        "errored": {"err": "boom", "rows_match": True, "schema_match": True},
+        "mismatch": {"err": None, "rows_match": False, "schema_match": True},
+    }
+    names = ["hashed", "rows_ok", "errored", "mismatch", "unreached"]
+    assert requeued(names, newest) == ["errored", "mismatch", "unreached"]
+
+    src = (
+        "_DRIVER_RECHECK: list[str] = [\n"
+        '    # rewritten in r[16]\n'
+        '    "a",\n'
+        "]\nAFTER = [1]\n"
+    )
+    assert list_literal_re("_DRIVER_RECHECK").sub("X", src) == "X\nAFTER = [1]\n"
+    empty = "_DRIVER_RECHECK: list[str] = []\nAFTER = [1]\n"
+    assert list_literal_re("_DRIVER_RECHECK").sub("X", empty) == "X\nAFTER = [1]\n"
+
+
 def test_rotation_handoff_state_is_ok_not_red():
     """The rotation gate must report the post-driver terminal state —
     priority-window heads green ONLY in uncommitted driver artifacts —

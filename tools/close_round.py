@@ -34,9 +34,26 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from verify_round import is_green  # noqa: E402  (a sibling in tools/)
+
 REGISTRY = os.path.join(
     REPO, "go_otel_clickhouse_ingestor_spark", "registry.py"
 )
+
+
+def list_literal_re(name: str) -> re.Pattern:
+    """The ``name: list[str] = [...]`` literal in registry.py, closed by
+    the ``]`` that starts a line (or ``[]`` when empty), so a ``]``
+    inside one of its comments cannot end the match early."""
+    return re.compile(
+        re.escape(name) + r": list\[str\] = \[(?:\]|.*?^\])", re.S | re.M
+    )
+
+
+def requeued(recheck: list[str], newest: dict) -> list[str]:
+    """Re-check names still queued: those the newest CORRECTNESS
+    artifact did not prove green (absent, errored or mismatched)."""
+    return [n for n in recheck if not is_green(newest.get(n, {}))]
 
 
 def evidence() -> tuple[set[str], set[str]]:
@@ -86,27 +103,24 @@ def rotate(dry_run: bool = False) -> list[str]:
         if not backlog
         else "_DRIVER_PRIORITY: list[str] = [\n" + body + "]"
     )
-    new_src, n_sub = re.subn(
-        r"_DRIVER_PRIORITY: list\[str\] = \[[^\]]*\]",
-        new_literal,
-        src,
-        count=1,
-        flags=re.S,
+    new_src, n_sub = list_literal_re("_DRIVER_PRIORITY").subn(
+        new_literal, src, count=1
     )
     if n_sub != 1:
         print("close_round: could not locate the _DRIVER_PRIORITY literal")
         sys.exit(2)
-    # _DRIVER_RECHECK maintenance: a recheck name that appears in the
-    # NEWEST CORRECTNESS artifact got its re-verification — drop it;
-    # names the window didn't reach stay queued.
+    # _DRIVER_RECHECK maintenance: a recheck name the NEWEST
+    # CORRECTNESS artifact proved green got its re-verification — drop
+    # it; names the window didn't reach, or that came back red, stay
+    # queued.
     from go_otel_clickhouse_ingestor_spark.registry import _DRIVER_RECHECK
 
     files = sorted(
         glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")),
         key=lambda p: int(re.search(r"r(\d+)\.json$", p).group(1)),
     )
-    newest = set(json.load(open(files[-1]))) if files else set()
-    still_queued = [n for n in _DRIVER_RECHECK if n not in newest]
+    newest = json.load(open(files[-1])) if files else {}
+    still_queued = requeued(_DRIVER_RECHECK, newest)
     if still_queued != list(_DRIVER_RECHECK):
         rc_body = "".join(f'    "{n}",\n' for n in still_queued)
         rc_literal = (
@@ -114,12 +128,8 @@ def rotate(dry_run: bool = False) -> list[str]:
             if not still_queued
             else "_DRIVER_RECHECK: list[str] = [\n" + rc_body + "]"
         )
-        new_src, rc_sub = re.subn(
-            r"_DRIVER_RECHECK: list\[str\] = \[[^\]]*\]",
-            rc_literal,
-            new_src,
-            count=1,
-            flags=re.S,
+        new_src, rc_sub = list_literal_re("_DRIVER_RECHECK").subn(
+            rc_literal, new_src, count=1
         )
         if rc_sub != 1:
             print("close_round: could not locate the _DRIVER_RECHECK literal")

@@ -43,6 +43,19 @@ sys.path.insert(0, REPO)
 WINDOW = 50  # driver CORRECTNESS slots per round
 
 
+def is_green(entry: dict) -> bool:
+    """One CORRECTNESS entry proves its query: hash match, or an
+    error-free run whose rows and schema match."""
+    return bool(
+        entry.get("hash_match")
+        or (
+            entry.get("err") is None
+            and entry.get("rows_match")
+            and entry.get("schema_match")
+        )
+    )
+
+
 def driver_green(exclude: frozenset[str] = frozenset()) -> set[str]:
     """Names proven green in any CORRECTNESS_r*.json on disk, skipping
     files whose basename is in ``exclude`` (the uncommitted driver
@@ -52,13 +65,7 @@ def driver_green(exclude: frozenset[str] = frozenset()) -> set[str]:
         if os.path.basename(f) in exclude:
             continue
         with open(f) as fh:
-            for name, r in json.load(fh).items():
-                if r.get("hash_match") or (
-                    r.get("err") is None
-                    and r.get("rows_match")
-                    and r.get("schema_match")
-                ):
-                    green.add(name)
+            green.update(n for n, r in json.load(fh).items() if is_green(r))
     return green
 
 
