@@ -21,9 +21,9 @@ flag/env table with flags overriding envs (``root.go:62-78``,
 Differences, on purpose: the ClickHouse endpoint is a JDBC url instead
 of host:port (the engine writes micro-batched JDBC, not row-at-a-time
 HTTP), and ``--sink-dir`` selects a parquet sink for environments
-without a database (this harness).  The consumer group id is recorded
-but offset tracking lives in the Spark checkpoint, not Kafka
-(``streaming/cdc_stream.py``).
+without a database (this harness).  Offsets live in the Spark checkpoint,
+not Kafka (``streaming/cdc_stream.py``); in cdc mode the consumer
+group id keys the default checkpoint directory, so a restart resumes.
 
 Usage::
 
@@ -68,7 +68,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--sink-dir", default="",
                    help="parquet sink directory (used when --clickhouse-url is empty)")
     p.add_argument("--checkpoint-dir", default="",
-                   help="streaming checkpoint location (default: temp dir)")
+                   help="streaming checkpoint location (default: cdc mode "
+                        "resumes from <tmp>/ingestor_ckpt_cdc_<group>)")
     p.add_argument("--source-dir", default="",
                    help="cdc mode: read Kafka-shaped JSON lines "
                         "(msg_id/key/value) from this directory instead of "
@@ -76,7 +77,7 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _sink(args, tracer):
+def _sink(args):
     from .streaming.sinks import JdbcSinkConfig, jdbc_foreach_batch, parquet_foreach_batch
 
     if args.clickhouse_url:
@@ -87,9 +88,22 @@ def _sink(args, tracer):
             password=args.clickhouse_password or None,
             database=args.clickhouse_db,
         )
-        return jdbc_foreach_batch(cfg, tracer=tracer)
+        return jdbc_foreach_batch(cfg)
     sink_dir = args.sink_dir or os.path.join(tempfile.gettempdir(), "ingestor_sink")
-    return parquet_foreach_batch(sink_dir, tracer=tracer)
+    return parquet_foreach_batch(sink_dir)
+
+
+def _checkpoint_dir(args, mode: str) -> str:
+    """``--checkpoint-dir``, else a default a CDC restart resumes from:
+    a stable path under the temp dir keyed by mode and ``--group`` (the
+    reference's offsets were keyed by that consumer group).  Synthetic
+    mode has nothing to resume and gets a fresh directory: a restored
+    rate source would emit every tick missed while down as one batch."""
+    if args.checkpoint_dir:
+        return args.checkpoint_dir
+    if mode == "synthetic":
+        return tempfile.mkdtemp(prefix="ingestor_ckpt_")
+    return os.path.join(tempfile.gettempdir(), f"ingestor_ckpt_{mode}_{args.group}")
 
 
 def run(argv: list[str] | None = None) -> int:
@@ -97,33 +111,28 @@ def run(argv: list[str] | None = None) -> int:
     seconds, then stop — the Spark twin of ``runIngestion``/``runCDC``
     (``cmd/root.go:99-172``)."""
     args = build_parser().parse_args(argv)
-    mode = args.mode.lower()
-    if mode not in ("", "synthetic", "cdc"):
+    mode = args.mode.lower() or "synthetic"
+    if mode not in ("synthetic", "cdc"):
         print(f"unknown --mode={args.mode} (expected synthetic|cdc)", file=sys.stderr)
         return 1
 
     from .session import get_spark
-    from .streaming.metrics import IngestionMetricsListener, serve_metrics
-    from .streaming.tracing import SpanEmittingListener, Tracer
+    from .streaming.metrics import IngestionMetricsListener, observe_stream, serve_metrics
+    from .streaming.tracing import SPAN_CDC_MESSAGE, SPAN_GENERATE
 
     spark = get_spark("ingestion-service")
-    tracer = Tracer("ingestion-service")
-    metrics = IngestionMetricsListener()
-    spans = SpanEmittingListener(tracer)
-    spark.streams.addListener(metrics)
-    spark.streams.addListener(spans)
-    server = serve_metrics(metrics, port=args.metrics_port)
+    telemetry = IngestionMetricsListener(SPAN_GENERATE if mode == "synthetic" else SPAN_CDC_MESSAGE)
+    spark.streams.addListener(telemetry)
+    server = serve_metrics(telemetry, port=args.metrics_port)
     print(
         f"Prometheus metrics at http://127.0.0.1:{server.server_address[1]}/metrics",
         file=sys.stderr,
     )
 
-    ckpt = args.checkpoint_dir or tempfile.mkdtemp(prefix="ingestor_ckpt_")
-    if mode in ("", "synthetic"):
+    if mode == "synthetic":
         from .streaming.synthetic import synthetic_events
 
         stream = synthetic_events(spark, rate=args.rate)
-        query_name = "synthetic"
     elif args.source_dir:
         from .streaming.cdc_stream import translate_stream
 
@@ -131,17 +140,16 @@ def run(argv: list[str] | None = None) -> int:
             args.source_dir
         )
         stream = translate_stream(raw)
-        query_name = "cdc"
     else:
         from .streaming.cdc_stream import kafka_cdc_stream
 
         stream = kafka_cdc_stream(spark, args.brokers, args.topic)
-        query_name = "cdc"
 
     query = (
-        stream.writeStream.queryName(query_name)
-        .foreachBatch(_sink(args, tracer))
-        .option("checkpointLocation", ckpt)
+        observe_stream(stream)
+        .writeStream.queryName(mode)
+        .foreachBatch(_sink(args))
+        .option("checkpointLocation", _checkpoint_dir(args, mode))
         .start()
     )
     try:
@@ -151,8 +159,7 @@ def run(argv: list[str] | None = None) -> int:
     finally:
         query.stop()
         server.shutdown()
-        spark.streams.removeListener(metrics)
-        spark.streams.removeListener(spans)
+        spark.streams.removeListener(telemetry)
     if query.exception() is not None:
         print(f"query failed: {query.exception()}", file=sys.stderr)
         return 1

@@ -129,9 +129,17 @@ def upsert_foreach_batch(state_dir: str, n_buckets: int = N_STATE_BUCKETS):
         return df.withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets)))
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        merged, touched = merge_partitions(
-            bucketed(batch_df), state_dir + "/versions", "bucket", DataFrame.dropDuplicates
-        )
+        # The merge runs two actions on the batch (the touched-bucket
+        # collect, then the merge itself).  Unpersisted, each re-runs
+        # the source scan and the translate, and doubles the trigger's
+        # numInputRows and observed metrics.
+        batch_df.persist()
+        try:
+            merged, touched = merge_partitions(
+                bucketed(batch_df), state_dir + "/versions", "bucket", DataFrame.dropDuplicates
+            )
+        finally:
+            batch_df.unpersist()
         if not touched:
             return
         cur = bucketed(current_state(merged))

@@ -1,5 +1,5 @@
-"""Pipeline metrics — the reference's Prometheus surface (A14) on
-Spark's listener machinery.
+"""Pipeline telemetry — the reference's Prometheus surface (A14) and
+its spans (A15), folded from Spark's per-trigger progress events.
 
 Reference collectors (``internal/metrics/metrics.go:11-38``):
 
@@ -8,10 +8,20 @@ Reference collectors (``internal/metrics/metrics.go:11-38``):
 - ``ingestion_clickhouse_insert_errors_total`` (counter)
 - ``ingestion_clickhouse_insert_latency_seconds`` (histogram)
 
-Spark mapping: a ``StreamingQueryListener`` accumulates the same four
-series from ``QueryProgressEvent`` — input rows -> generated, sink
-rows -> inserted, batch durations -> latency histogram samples,
-``onQueryTerminated`` with exception -> errors.  ``render()`` emits
+Spark mapping: one ``StreamingQueryListener`` reads each
+``QueryProgressEvent`` and folds
+
+- ``numInputRows`` -> generated;
+- the row count :func:`observe_stream` attaches to the stream handed
+  to the sink -> inserted (rows the translate drops are not counted);
+- ``durationMs["addBatch"]``, the sink write, -> a latency sample;
+- ``onQueryTerminated`` with an exception -> an insert error.
+
+From the same event it records the spans, back-dated from the
+trigger's ``timestamp`` and ``durationMs``: the stage span
+(``generateEvent`` or ``cdc.message``) over the trigger, and a child
+``clickhouse.post`` over ``addBatch``, which ends before
+``commitOffsets``, the trigger's last phase.  ``render()`` emits
 Prometheus text exposition, so an HTTP /metrics endpoint (the
 reference serves one, ``metrics.go:48-56``) just returns that string.
 """
@@ -20,20 +30,31 @@ from __future__ import annotations
 
 import threading
 from collections import defaultdict
+from datetime import datetime
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+from .tracing import SPAN_CLICKHOUSE_POST, SPAN_GENERATE, Tracer
+
 #: Prometheus DefBuckets (metrics.go:21 uses prometheus.DefBuckets).
 DEF_BUCKETS = (0.005, 0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 1.0, 2.5, 5.0, 10.0)
 
+#: The name :func:`observe_stream` attaches its row count under.
+OBSERVATION_NAME = "ingestion"
+
 
 class IngestionMetricsListener(StreamingQueryListener):
-    """Accumulates the reference's four metric series from streaming
-    progress events.  Thread-safe: listener callbacks arrive on Spark's
-    listener bus thread."""
+    """The program's one telemetry path: the reference's four metric
+    series and its spans, from streaming progress events.  ``stage``
+    names the per-trigger span (``generateEvent`` for the synthetic
+    pipeline, ``cdc.message`` for CDC); spans land in ``self.tracer``.
+    Thread-safe: callbacks arrive on Spark's listener bus thread while
+    ``render()`` serves scrapes."""
 
-    def __init__(self) -> None:
+    def __init__(self, stage: str = SPAN_GENERATE) -> None:
+        self.stage = stage
+        self.tracer = Tracer()
         self._lock = threading.Lock()
         self.generated_events_total = 0
         self.rows_inserted_total = 0
@@ -48,22 +69,37 @@ class IngestionMetricsListener(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
-        _fold_observed(self, p)  # named df.observe() metrics, if attached
-        rows = p.numInputRows or 0
-        batch_s = ((p.batchDuration or 0)) / 1000.0
+        ms = p.durationMs
+        write_ms = ms.get("addBatch")  # absent when the trigger ran no batch
+        observed = (p.observedMetrics or {}).get(OBSERVATION_NAME)
+        inserted = None if observed is None else observed["rows_total"]
         with self._lock:
-            self.generated_events_total += rows
-            self.rows_inserted_total += rows  # sink rows == input rows here
-            self.latency_sum += batch_s
-            self.latency_count += 1
-            # Per-bucket storage: only the SMALLEST bucket that fits is
-            # incremented; render() produces the cumulative form.  (An
-            # earlier version stored cumulatively AND re-summed in
-            # render, double-counting every observation.)
-            for b in DEF_BUCKETS:
-                if batch_s <= b:
-                    self.latency_bucket_counts[b] += 1
-                    break
+            self.generated_events_total += p.numInputRows or 0
+            self.rows_inserted_total += inserted or 0
+            if write_ms is not None:
+                write_s = write_ms / 1000.0
+                self.latency_sum += write_s
+                self.latency_count += 1
+                # Per-bucket storage: only the SMALLEST bucket that fits
+                # is incremented; render() produces the cumulative form.
+                for b in DEF_BUCKETS:
+                    if write_s <= b:
+                        self.latency_bucket_counts[b] += 1
+                        break
+
+        start_ns = round(datetime.fromisoformat(p.timestamp).timestamp() * 1e3) * 1_000_000
+        end_ns = start_ns + ms.get("triggerExecution", 0) * 1_000_000
+        stage = self.tracer.record(
+            self.stage, start_ns, end_ns,
+            batch_id=p.batchId, rows=p.numInputRows or 0, query_id=str(p.id),
+        )
+        if write_ms is not None:
+            post_end = end_ns - ms.get("commitOffsets", 0) * 1_000_000
+            rows = {} if inserted is None else {"rows": inserted}
+            self.tracer.record(
+                SPAN_CLICKHOUSE_POST, max(start_ns, post_end - write_ms * 1_000_000), post_end,
+                parent=stage, batch_id=p.batchId, **rows,
+            )
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass
@@ -133,61 +169,13 @@ def serve_metrics(
     return server
 
 
-# -- df.observe() bridge ----------------------------------------------------
-#
-# SURVEY.md §1.1 maps the reference's metrics time-series onto
-# ``df.observe()`` + listeners: observe attaches named aggregates to a
-# plan so every execution reports them for free — no second scan, no
-# caching — which is how per-batch row/error accounting should travel
-# at 100 TB (a separate count() would re-run the pipeline).
-
-#: The observation name both the batch and streaming paths use.
-OBSERVATION_NAME = "ingestion"
-
-
-def _ingest_counters(df):
-    """The observation's aggregates: total rows and malformed rows (null
-    ``id`` after envelope decode — the engine-side analog of the
-    reference's insert errors, ``internal/metrics/metrics.go:24-28``;
-    always 0 for a frame without an ``id`` column)."""
+def observe_stream(df):
+    """Attach the row count the listener folds into
+    ``rows_inserted_total``.  Call it on the stream handed to the sink
+    (after the translate): each micro-batch's count arrives in
+    ``QueryProgressEvent.observedMetrics['ingestion']``.  The aggregate
+    rides the existing plan — no extra pass; attached by NAME because
+    the ``Observation`` class is batch-only."""
     from pyspark.sql import functions as F
 
-    malformed = (
-        F.count(F.when(F.col("id").isNull(), 1))
-        if "id" in df.columns
-        else F.count(F.lit(None))
-    )
-    return F.count(F.lit(1)).alias("rows_total"), malformed.alias("rows_malformed")
-
-
-def with_ingest_observation(df):
-    """Attach the reference's ingest counters (:func:`_ingest_counters`)
-    to a BATCH DataFrame as a named observation.
-
-    Returns ``(df, observation)``; read ``observation.get`` AFTER the
-    first action on ``df``.  The aggregates ride the existing plan —
-    zero extra passes."""
-    from pyspark.sql import Observation
-
-    obs = Observation(OBSERVATION_NAME)
-    return df.observe(obs, *_ingest_counters(df)), obs
-
-
-def observe_stream(df):
-    """Streaming face of the same observation: attach by NAME (the
-    ``Observation`` class is batch-only); each micro-batch's values
-    arrive in ``QueryProgressEvent.observedMetrics['ingestion']`` and
-    ``IngestionMetricsListener`` folds them into the counters."""
-    return df.observe(OBSERVATION_NAME, *_ingest_counters(df))
-
-
-def _fold_observed(listener: IngestionMetricsListener, progress) -> None:
-    """Fold a QueryProgressEvent's observed metrics into the counters
-    (called from onQueryProgress; split out for direct unit testing)."""
-    # observedMetrics is absent on progress events from queries with no
-    # attached Observation (and on minimal test fakes) — treat as empty.
-    row = (getattr(progress, "observedMetrics", None) or {}).get(OBSERVATION_NAME)
-    if row is None:
-        return
-    with listener._lock:
-        listener.insert_errors_total += row["rows_malformed"] or 0
+    return df.observe(OBSERVATION_NAME, F.count(F.lit(1)).alias("rows_total"))

@@ -65,45 +65,30 @@ def clickhouse_shape(df: DataFrame) -> DataFrame:
     return out
 
 
-def jdbc_foreach_batch(cfg: JdbcSinkConfig, tracer=None):
+def jdbc_foreach_batch(cfg: JdbcSinkConfig):
     """foreachBatch writer: micro-batch append via JDBC.  A failed
-    batch raises -> Structured Streaming retries from the checkpoint
-    (at-least-once; the target table's ReplacingMergeTree contract
-    dedups, README.md:121).  With a ``tracer``, each write is wrapped
-    in a ``clickhouse.post`` span (A15, ``clickhouse.go:28``)."""
+    batch raises -> Structured Streaming retries from the checkpoint.
+    JDBC commits per task partition, so a retried batch re-inserts the
+    partitions that already committed: at-least-once, and the target
+    table's ReplacingMergeTree contract dedups (README.md:121)."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        def write():
-            clickhouse_shape(batch_df).write.mode("append").jdbc(
-                cfg.url, cfg.qualified_table(), properties=cfg.properties()
-            )
-
-        _traced_write(tracer, write, batch_df, batch_id, cfg.qualified_table())
+        clickhouse_shape(batch_df).write.mode("append").jdbc(
+            cfg.url, cfg.qualified_table(), properties=cfg.properties()
+        )
 
     return apply
 
 
-def parquet_foreach_batch(path: str, tracer=None):
+def parquet_foreach_batch(path: str):
     """Test/demo sink: append micro-batches to a parquet directory
-    (stands in for the JDBC sink where no database exists)."""
+    (stands in for the JDBC sink where no database exists).  A batch
+    retried after its append committed appends again: at-least-once."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        def write():
-            clickhouse_shape(batch_df).write.mode("append").parquet(path)
-
-        _traced_write(tracer, write, batch_df, batch_id, path)
+        clickhouse_shape(batch_df).write.mode("append").parquet(path)
 
     return apply
-
-
-def _traced_write(tracer, write, batch_df: DataFrame, batch_id: int, target: str) -> None:
-    if tracer is None:
-        write()
-        return
-    from .tracing import SPAN_CLICKHOUSE_POST
-
-    with tracer.span(SPAN_CLICKHOUSE_POST, batch_id=batch_id, table=target):
-        write()
 
 
 def read_partitions(spark: SparkSession, path: str, col: str, values: list):

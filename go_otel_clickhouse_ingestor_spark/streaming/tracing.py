@@ -11,22 +11,20 @@ This module keeps the same span names and shape on Spark's execution
 model: one span per *micro-batch* stage rather than per row — the
 reference traces each row because it processes one row at a time; a
 Spark trace of 10k per-row spans would be noise, so the batch is the
-unit of work and the row count is a span attribute.  If the OTel
-Python SDK is installed, ``Tracer`` mirrors every finished span into
-it (import-gated — the SDK is not in this container).
+unit of work and the row count is a span attribute.  Spans are not
+timed around code: ``streaming/metrics.py``'s listener records them
+after the fact, with the bounds each ``QueryProgressEvent`` reports.
+If the OTel Python SDK is installed, ``Tracer`` mirrors every recorded
+span into it with the same bounds (import-gated — the SDK is optional).
 """
 
 from __future__ import annotations
 
 import json
 import threading
-import time
 import uuid
 from collections import deque
-from contextlib import contextmanager
 from dataclasses import dataclass, field
-
-from pyspark.sql.streaming import StreamingQueryListener
 
 #: Span names, matching the reference call sites exactly.
 SPAN_GENERATE = "generateEvent"  # cmd/root.go:130
@@ -43,7 +41,7 @@ class Span:
     span_id: str
     parent_id: str | None
     start_ns: int
-    end_ns: int = 0
+    end_ns: int
     attributes: dict = field(default_factory=dict)
 
     @property
@@ -68,8 +66,8 @@ class Tracer:
     (``tracing.go:19-51``): a service-name resource, a bounded buffer
     standing in for the batch processor, and optional OTel SDK export.
 
-    Thread-safe: foreachBatch callbacks and the listener bus record
-    spans concurrently."""
+    Thread-safe: the listener bus records spans while other threads
+    read them."""
 
     def __init__(self, service_name: str = "ingestion-service", capacity: int = 10_000):
         self.service_name = service_name
@@ -79,39 +77,35 @@ class Tracer:
 
     @staticmethod
     def _try_otel():
-        try:  # pragma: no cover - SDK absent in this container
+        try:  # pragma: no cover - the SDK is optional
             from opentelemetry import trace as ot
 
             return ot.get_tracer(__name__)
         except Exception:
             return None
 
-    @contextmanager
-    def span(self, name: str, parent: Span | None = None, **attributes):
-        """Start/finish one span around a block.  Errors are recorded
-        as an ``error`` attribute and re-raised (the reference logs and
-        continues at the call site — error policy stays with callers)."""
+    def record(
+        self, name: str, start_ns: int, end_ns: int, parent: Span | None = None, **attributes
+    ) -> Span:
+        """Record one finished span with known bounds (epoch ns); a
+        ``parent`` puts it in the parent's trace, as its child."""
         s = Span(
             name=name,
             trace_id=parent.trace_id if parent else uuid.uuid4().hex,
             span_id=uuid.uuid4().hex[:16],
             parent_id=parent.span_id if parent else None,
-            start_ns=time.time_ns(),
+            start_ns=start_ns,
+            end_ns=end_ns,
             attributes={"service.name": self.service_name, **attributes},
         )
-        try:
-            yield s
-        except Exception as exc:
-            s.attributes["error"] = repr(exc)
-            raise
-        finally:
-            s.end_ns = time.time_ns()
-            with self._lock:
-                self._spans.append(s)
-            if self._otel is not None:  # pragma: no cover
-                with self._otel.start_as_current_span(name) as os_:
-                    for k, v in s.attributes.items():
-                        os_.set_attribute(k, str(v))
+        with self._lock:
+            self._spans.append(s)
+        if self._otel is not None:
+            os_ = self._otel.start_span(name, start_time=start_ns)
+            for k, v in s.attributes.items():
+                os_.set_attribute(k, str(v))
+            os_.end(end_time=end_ns)
+        return s
 
     def spans(self, name: str | None = None) -> list[Span]:
         with self._lock:
@@ -125,43 +119,3 @@ class Tracer:
         """Trace-correlated log prefix, mirroring
         ``internal/logging/logging.go:9-12`` ("[trace_id] msg")."""
         return f"[{span.trace_id}]"
-
-
-class SpanEmittingListener(StreamingQueryListener):
-    """Emits one pipeline-stage span per micro-batch from streaming
-    progress events: queries named ``synthetic*`` get ``generateEvent``
-    spans, ``cdc*`` get ``cdc.message`` — the same stage names the
-    reference starts per unit of work, at Spark's batch granularity."""
-
-    def __init__(self, tracer: Tracer):
-        self._tracer = tracer
-
-    @staticmethod
-    def _span_name(query_name: str | None) -> str:
-        q = (query_name or "").lower()
-        if q.startswith("cdc"):
-            return SPAN_CDC_MESSAGE
-        return SPAN_GENERATE
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        dur_ms = p.batchDuration or 0
-        end = time.time_ns()
-        name = self._span_name(p.name)
-        with self._tracer.span(
-            name,
-            batch_id=p.batchId,
-            rows=p.numInputRows or 0,
-            query_id=str(p.id),
-        ) as s:
-            # back-date the span to cover the actual batch execution
-            s.start_ns = end - int(dur_ms * 1e6)
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
