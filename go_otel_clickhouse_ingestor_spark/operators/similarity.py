@@ -879,11 +879,13 @@ def ann_index_build(spark: SparkSession, e: DataFrame, path: str) -> None:
 
     The build is O(N): one Arrow encode pass + the shared
     ``_ivf_build`` assignment; at 100 TB it is the same three writes,
-    with ``postings`` partitioned by cell prefix."""
+    with ``postings`` partitioned by cell prefix.  ``path`` is a local
+    path or a URI (``file://``, ``hdfs://``, ...); the codebooks resolve
+    it through pyarrow's filesystem of the same scheme."""
     import os
-    import shutil
 
     import pyarrow as pa
+    import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
     dim = embedding_dim(e)
@@ -916,9 +918,12 @@ def ann_index_build(spark: SparkSession, e: DataFrame, path: str) -> None:
             ),
         }
     )
-    shutil.rmtree(f"{path}/codebooks", ignore_errors=True)
-    os.makedirs(f"{path}/codebooks", exist_ok=True)
-    pq.write_table(cb, f"{path}/codebooks/part-00000.parquet")
+    fs, root = pafs.FileSystem.from_uri(
+        path if "://" in path else os.path.abspath(path)
+    )
+    fs.delete_dir_contents(f"{root}/codebooks", missing_dir_ok=True)
+    fs.create_dir(f"{root}/codebooks")
+    pq.write_table(cb, f"{root}/codebooks/part-00000.parquet", filesystem=fs)
     cent2.write.mode("overwrite").parquet(f"{path}/centroids")
     assigned.select("cell", "vec_id", "code").write.mode(
         "overwrite"
@@ -1019,12 +1024,6 @@ def sim_ann_index_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_index_probe(spark, path, e)
 
 
-#: Scratch dirs of previous ``sim_ann_index_build`` invocations in this
-#: process — each call removes its predecessor's (already consumed)
-#: output so repeated bench reps never accumulate stale indexes.
-_BUILD_DIRS: list[str] = []
-
-
 @query("sim_ann_index_build")  # rows-only: quantizer/codebook internals are engine-specific
 def sim_ann_index_build_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BUILD half of the lake-index lifecycle as its OWN timed
@@ -1035,7 +1034,9 @@ def sim_ann_index_build_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache, never reused across invocations — and returns the built
     index's shape read back from the written artifacts: one row per
     lake table with its row count plus the distinct posting-cell
-    count.  Rows-only (cells/codebooks are quantizer internals);
+    count.  The stats are pinned with an eager local checkpoint before
+    the scratch directory is removed, so the returned frame never
+    scans files.  Rows-only (cells/codebooks are quantizer internals);
     pytest pins postings == corpus rows, cells == centroid rows, and
     the probe-over-a-fresh-build equality with ``sim_ann_ivfpq``."""
     import shutil
@@ -1046,26 +1047,26 @@ def sim_ann_index_build_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "artifact string, n_rows bigint, n_cells bigint"
         )
-    while _BUILD_DIRS:  # previous rep's output was consumed; drop it
-        shutil.rmtree(_BUILD_DIRS.pop(), ignore_errors=True)
     path = tempfile.mkdtemp(prefix="annidx_build_")
-    _BUILD_DIRS.append(path)
-    ann_index_build(spark, e, path)
-    stats = None
-    for name in ("codebooks", "centroids", "postings"):
-        t = spark.read.parquet(f"{path}/{name}")
-        s = t.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (
-                F.countDistinct("cell")
-                if name == "postings"
-                else F.max(F.lit(None))
-            )
-            .cast("long")
-            .alias("n_cells"),
-        ).select(F.lit(name).alias("artifact"), "n_rows", "n_cells")
-        stats = s if stats is None else stats.unionAll(s)
-    return stats
+    try:
+        ann_index_build(spark, e, path)
+        stats = None
+        for name in ("codebooks", "centroids", "postings"):
+            t = spark.read.parquet(f"{path}/{name}")
+            s = t.agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                (
+                    F.countDistinct("cell")
+                    if name == "postings"
+                    else F.max(F.lit(None))
+                )
+                .cast("long")
+                .alias("n_cells"),
+            ).select(F.lit(name).alias("artifact"), "n_rows", "n_cells")
+            stats = s if stats is None else stats.unionAll(s)
+        return stats.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 @query("sim_ann_pq")  # rows-only: codebook/ADC internals are engine-specific

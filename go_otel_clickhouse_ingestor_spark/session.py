@@ -73,12 +73,6 @@ def get_spark(app_name: str = "go-otel-clickhouse-ingestor-spark") -> SparkSessi
     and only the SQL confs below matter.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # wire in a vendored protobuf runtime (if one exists on the host)
-    # BEFORE the JVM launches so Python workers inherit the PYTHONPATH —
-    # transformWithStateInPandas' state protocol needs google.protobuf
-    from .streaming.protobuf_compat import ensure_protobuf
-
-    ensure_protobuf()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

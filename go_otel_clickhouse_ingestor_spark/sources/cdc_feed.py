@@ -20,14 +20,10 @@ are stable, and at-least-once semantics can be asserted exactly.
 Scale/parallelism: the batch reader splits the offset range into
 ``partitions`` input partitions read independently by executors —
 the same partition-parallel shape as Kafka topic partitions.  The
-stream reader comes in BOTH API shapes: ``cdc_feed`` uses a
-``SimpleDataSourceStreamReader`` advancing ``batch_size`` offsets per
-micro-batch (prototype-scale by design: the simple reader routes
-records through the driver), and ``cdc_feed_part`` is the
-partition-planned ``DataSourceStreamReader`` — Kafka-shaped
-per-partition offset maps, driver plans ranges, reads execute on
-executors — the broker-scale shape, checkpoint-restart-proven in
-tests/test_streaming.py.
+stream reader is partition-planned the same way: offsets are a
+Kafka-shaped per-partition map, the driver plans ranges, and reads
+execute on executors, so records never route through the driver.
+Checkpoint-restart is proven in tests/test_streaming.py.
 
 Reference: internal/ingestion/cdc.go:36-55 (reader loop),
 internal/model/cdc.go:7-30 (envelope shape).
@@ -38,13 +34,6 @@ from __future__ import annotations
 import json
 
 ACTION_OPS = ("c", "u", "u", "d")
-
-#: Kafka-source schema contract (mirrors KAFKA_SOURCE_SCHEMA; keep in
-#: lockstep with streaming/cdc_stream.py).
-CDC_FEED_SCHEMA = (
-    "key binary, value binary, topic string, partition int, "
-    "offset long, timestamp timestamp, timestampType int"
-)
 
 #: Epoch micros base for generated source timestamps (2025-08-13 12:00
 #: UTC, matching the fixture corpus era).
@@ -113,7 +102,6 @@ try:  # pragma: no cover - import guard mirrors the repo convention
         DataSourceReader,
         DataSourceStreamReader,
         InputPartition,
-        SimpleDataSourceStreamReader,
     )
 
     class _RangePartition(InputPartition):
@@ -140,34 +128,8 @@ try:  # pragma: no cover - import guard mirrors the repo convention
             for off in range(partition.start, partition.end):
                 yield _row(off, partition.index)
 
-    class CDCFeedStreamReader(SimpleDataSourceStreamReader):
-        """Micro-batch stream: ``batch_size`` offsets per trigger until
-        ``max_offset`` (unbounded if 0)."""
-
-        def __init__(self, options):
-            self.batch_size = int(options.get("batch_size", 20))
-            self.max_offset = int(options.get("max_offset", 0))
-
-        def initialOffset(self):
-            return {"offset": 0}
-
-        def read(self, start):
-            first = start["offset"]
-            end = first + self.batch_size
-            if self.max_offset:
-                end = min(end, self.max_offset)
-            rows = iter([_row(off, 0) for off in range(first, end)])
-            return rows, {"offset": end}
-
-        def readBetweenOffsets(self, start, end):
-            return iter([_row(off, 0) for off in range(start["offset"], end["offset"])])
-
-        def commit(self, end):
-            pass  # offsets are derivable; nothing to clean up
-
-    class CDCFeedPartStreamReader(DataSourceStreamReader):
-        """PARTITION-PLANNED stream reader — the broker-scale rung the
-        simple reader's docstring names: offsets are a per-partition
+    class CDCFeedStreamReader(DataSourceStreamReader):
+        """Partition-planned stream reader: offsets are a per-partition
         map (exactly Kafka's (topic-partition → offset) shape), the
         driver only PLANS ranges, and ``read`` runs ON EXECUTORS, one
         task per partition — records never route through the driver.
@@ -199,7 +161,7 @@ try:  # pragma: no cover - import guard mirrors the repo convention
 
         def read(self, partition):
             # executor-side: this generator runs in the task, not on
-            # the driver — the scale difference from the simple reader
+            # the driver
             for off in range(partition.start, partition.end):
                 yield _row(
                     off * self.n_parts + partition.index,
@@ -210,38 +172,25 @@ try:  # pragma: no cover - import guard mirrors the repo convention
         def commit(self, end):
             pass  # offsets are derivable; nothing to clean up
 
-    class CDCFeedPartDataSource(DataSource):
-        """``format("cdc_feed_part")`` — the partition-planned
-        streaming variant; options: partitions, available."""
-
-        @classmethod
-        def name(cls):
-            return "cdc_feed_part"
-
-        def schema(self):
-            return CDC_FEED_SCHEMA
-
-        def reader(self, schema):
-            return CDCFeedBatchReader(self.options)
-
-        def streamReader(self, schema):
-            return CDCFeedPartStreamReader(self.options)
-
     class CDCFeedDataSource(DataSource):
         """``format("cdc_feed")`` — options: rows, partitions (batch);
-        batch_size, max_offset (streaming)."""
+        partitions, available (streaming)."""
 
         @classmethod
         def name(cls):
             return "cdc_feed"
 
         def schema(self):
-            return CDC_FEED_SCHEMA
+            # imported at call time: operators.cdc builds its oracle
+            # from this module at import, and cdc_stream imports it
+            from ..streaming.cdc_stream import KAFKA_SOURCE_SCHEMA
+
+            return KAFKA_SOURCE_SCHEMA
 
         def reader(self, schema):
             return CDCFeedBatchReader(self.options)
 
-        def simpleStreamReader(self, schema):
+        def streamReader(self, schema):
             return CDCFeedStreamReader(self.options)
 
     HAVE_DATASOURCE_API = True
@@ -250,8 +199,7 @@ except ImportError:  # pragma: no cover
 
 
 def register(spark) -> None:
-    """Register both sources on this session (idempotent)."""
+    """Register the ``cdc_feed`` source on this session (idempotent)."""
     if not HAVE_DATASOURCE_API:
         raise RuntimeError("pyspark.sql.datasource API unavailable")
     spark.dataSource.register(CDCFeedDataSource)
-    spark.dataSource.register(CDCFeedPartDataSource)

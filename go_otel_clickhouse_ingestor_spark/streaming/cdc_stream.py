@@ -104,14 +104,14 @@ def kafka_cdc_stream(
 N_STATE_BUCKETS = 16
 
 
-def upsert_foreach_batch(state_dir: str, n_buckets: int = N_STATE_BUCKETS):
+def upsert_foreach_batch(state_dir: str):
     """A16 online: a foreachBatch MERGE maintaining the versions +
     current-state tables (latest ``_lsn`` per id, soft deletes kept as
     versions), id-bucketed so per-batch work is O(touched state), not
     O(total state).
 
     Layout: ``versions/`` and ``current/`` are parquet partitioned by
-    ``bucket = pmod(xxhash64(id), n_buckets)``.  Each micro-batch:
+    ``bucket = pmod(xxhash64(id), N_STATE_BUCKETS)``.  Each micro-batch:
 
     1. merges its rows into the ``versions/`` buckets its ids hash into
        with ``sinks.merge_partitions``, de-duplicating exact replays
@@ -126,7 +126,7 @@ def upsert_foreach_batch(state_dir: str, n_buckets: int = N_STATE_BUCKETS):
     """
 
     def bucketed(df: DataFrame) -> DataFrame:
-        return df.withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets)))
+        return df.withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(N_STATE_BUCKETS)))
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         # The merge runs two actions on the batch (the touched-bucket

@@ -1,4 +1,4 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``.
+"""Custom stateful streaming operators via ``applyInPandasWithState``.
 
 The reference keeps no stream state at all (every message is handled
 and forgotten; the only "state" is ClickHouse's ReplacingMergeTree,
@@ -8,11 +8,18 @@ dedup, ``foreachBatch`` merge — all in ``windows.py``/``cdc_stream.py``)
 can't express the semantics: arbitrary per-key accumulators that
 survive across micro-batches in the state store.
 
+Every recurrence here has one face, on ``applyInPandasWithState``.
+Where the state lives is a session setting, not a second API: the
+default provider keeps it in executor heap, and setting
+``spark.sql.streaming.stateStore.providerClass`` to
+``ROCKSDB_PROVIDER`` keeps it on local disk, with the same operators
+unchanged.
+
 Scale notes: state lives in the executor state store partitioned by
 the grouping key — the same shuffle partitioning as any keyed agg; a
-key's state must stay small (two numbers here).  Production runs set
-a timeout (``GroupStateTimeout``) so abandoned keys age out instead of
-growing the store forever; the runner exposes that knob.
+key's state must stay small (two numbers here).  Keys that can go idle
+need a timeout so they age out instead of growing the store forever;
+``user_running_totals_ttl`` shows the event-time form.
 """
 
 from __future__ import annotations
@@ -24,6 +31,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+#: RocksDB state-store provider class, for
+#: ``spark.sql.streaming.stateStore.providerClass``.
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 #: Output row per updated user; state is (total_value, n_events).
 _OUT_SCHEMA = "user_id long, n_events long, total_value double"
@@ -58,73 +71,6 @@ def user_running_totals(events: DataFrame) -> DataFrame:
             stateStructType=_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# --------------------------------------------------------------------
-# Spark 4 successor API: transformWithStateInPandas.  Same running-
-# totals semantics as user_running_totals above, expressed as a
-# StatefulProcessor: typed composite state (ValueState) with explicit
-# lifecycle (init/handleInputRows/close), timers available for TTL
-# eviction, and the state store pluggable per query (RocksDB provider
-# required — disk-backed, so state size is bounded by local SSD rather
-# than executor heap, the 100 TB-scale difference from the
-# applyInPandasWithState in-memory store).
-
-try:  # pragma: no cover - import surface depends on the PySpark build
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    _HAS_TWS = True
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    _HAS_TWS = False
-
-#: RocksDB state-store provider class transformWithState requires.
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-class RunningTotalsProcessor(StatefulProcessor):
-    """Per-user running (n_events, total_value) as a StatefulProcessor."""
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._totals = handle.getValueState("totals", _STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        total, cnt = self._totals.get() if self._totals.exists() else (0.0, 0)
-        for pdf in rows:
-            cnt += len(pdf)
-            total += float(pdf["value"].sum())
-        self._totals.update((total, cnt))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [cnt], "total_value": [round(total, 6)]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def user_running_totals_tws(events: DataFrame) -> DataFrame:
-    """``user_running_totals`` on the transformWithStateInPandas API.
-
-    The session must run the RocksDB state-store provider
-    (``ROCKSDB_PROVIDER``); the test sets it per query."""
-    if not _HAS_TWS:  # loud gate, matching the multimodal codec stubs
-        raise NotImplementedError(
-            "transformWithStateInPandas requires PySpark >= 4.0"
-        )
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotalsProcessor(),
-            outputStructType=_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 
@@ -693,160 +639,3 @@ def token_bucket_stream(events: DataFrame) -> DataFrame:
         )
     )
 
-
-# --------------------------------------------------------------------
-# transformWithStateInPandas faces of the round-9 stateful twins.
-# Same recurrences as the applyInPandasWithState folds above (the
-# equivalence tests pin all three faces — batch, AIPWS, TWS — row for
-# row on ordered feeds); what the second backend buys at 100 TB is the
-# RocksDB state store (disk-backed, so the per-key state population is
-# bounded by local SSD instead of executor heap) plus the typed-state/
-# timer lifecycle the successor API standardizes.
-
-_TB_TWS_STATE = "bal long, prev_ts long, rn long"
-
-
-class TokenBucketProcessor(StatefulProcessor):
-    """Per-user token-bucket admission as a StatefulProcessor —
-    ``_token_bucket_fold``'s recurrence on the Spark 4 API."""
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._bucket = handle.getValueState("bucket", _TB_TWS_STATE)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        from ..operators.analytics import _TB_CAP_US, _TB_COST_US
-
-        bal, prev_ts, rn = (
-            self._bucket.get() if self._bucket.exists() else (_TB_CAP_US, -1, 0)
-        )
-        out_eid, out_rn, out_adm, out_bal = [], [], [], []
-        # concat BEFORE sorting — the _token_bucket_fold discipline: a
-        # group split across Arrow chunks must not feed the recurrence
-        # out-of-order timestamps
-        chunks = list(rows)
-        pdf = pd.concat(chunks) if chunks else pd.DataFrame()
-        if len(pdf):
-            pdf = pdf.sort_values(["ts_us", "event_id"])
-            for eid, ts in zip(pdf["event_id"], pdf["ts_us"]):
-                if prev_ts >= 0:
-                    bal = min(_TB_CAP_US, bal + (int(ts) - prev_ts))
-                prev_ts = int(ts)
-                admitted = bal >= _TB_COST_US
-                if admitted:
-                    bal -= _TB_COST_US
-                rn += 1
-                out_eid.append(int(eid))
-                out_rn.append(rn)
-                out_adm.append(admitted)
-                out_bal.append(bal)
-        self._bucket.update((int(bal), int(prev_ts), int(rn)))
-        yield pd.DataFrame(
-            {
-                "user_id": key[0],
-                "event_id": out_eid,
-                "rn": out_rn,
-                "admitted": out_adm,
-                "balance_us": out_bal,
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def token_bucket_stream_tws(events: DataFrame) -> DataFrame:
-    """``token_bucket_stream`` on transformWithStateInPandas (RocksDB
-    state store; the session/test sets ``ROCKSDB_PROVIDER``)."""
-    if not _HAS_TWS:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires PySpark >= 4.0"
-        )
-    return (
-        events.select("user_id", "event_id", F.unix_micros("ts").alias("ts_us"))
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=TokenBucketProcessor(),
-            outputStructType=(
-                "user_id long, event_id long, rn long, "
-                "admitted boolean, balance_us long"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-class CusumProcessor(StatefulProcessor):
-    """Two-sided CUSUM with a fixed (mu, sigma) baseline as a
-    StatefulProcessor — ``cusum_fold``'s integer-micro recurrence on
-    the Spark 4 API.  Baseline constants travel in the processor
-    instance (pickled to the executors), exactly like the closure the
-    AIPWS face captures."""
-
-    def __init__(self, mu: float, sigma: float) -> None:
-        self._mu, self._sigma = float(mu), float(sigma)
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._cusum = handle.getValueState("cusum", _CUSUM_STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        import math
-
-        sp, sn = self._cusum.get() if self._cusum.exists() else (0, 0)
-        chunks = list(rows)
-        pdf = pd.concat(chunks) if chunks else pd.DataFrame()
-        out = []
-        if len(pdf):
-            pdf = pdf.sort_values("day")
-            for day, x in zip(pdf["day"], pdf["x"].astype(float)):
-                z_u = int(
-                    math.floor((x - self._mu) / self._sigma * 1_000_000 + 0.5)
-                )
-                sp = max(0, sp + z_u - _CUSUM_K_U)
-                sn = max(0, sn - z_u - _CUSUM_K_U)
-                out.append(
-                    (
-                        key[0],
-                        day,
-                        round(sp / 1_000_000.0, 6),
-                        round(sn / 1_000_000.0, 6),
-                        sp > _CUSUM_H_U,
-                        sn > _CUSUM_H_U,
-                    )
-                )
-            self._cusum.update((int(sp), int(sn)))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "series", "day", "cusum_pos", "cusum_neg",
-                "alarm_up", "alarm_down",
-            ],
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def series_cusum_stream_tws(
-    daily: DataFrame, mu: float, sigma: float
-) -> DataFrame:
-    """``series_cusum_stream`` on transformWithStateInPandas (RocksDB
-    state store)."""
-    if not _HAS_TWS:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires PySpark >= 4.0"
-        )
-    return (
-        daily.select("series", "day", "x")
-        .groupBy("series")
-        .transformWithStateInPandas(
-            statefulProcessor=CusumProcessor(mu, sigma),
-            outputStructType=_CUSUM_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

@@ -1,5 +1,6 @@
-"""Event-time windowing, watermarks, streaming dedup, stream-static
-enrichment (SURVEY.md §2.B streaming-only rows).
+"""Event-time windowing, watermarks, stream-static and stream-stream
+joins (SURVEY.md §2.B streaming-only rows).  Streaming exact dedup is
+``dedup_stream.dedup_exact_stream``.
 
 The reference is processing-time only (a Go ticker); these are the
 event-time operators its sink tables exist to feed.  All builders take
@@ -10,8 +11,7 @@ equivalents (same expressions), which is how tests pin semantics.
 
 Scale notes: windowed aggregation state is partitioned by (window,
 keys) in the state store; the watermark bounds state size — without
-it a 100 TB stream grows state forever.  ``dropDuplicatesWithinWatermark``
-keeps only in-watermark keys for the same reason.
+it a 100 TB stream grows state forever.
 """
 
 from __future__ import annotations
@@ -76,12 +76,6 @@ def session_counts(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
             "n_events",
         )
     )
-
-
-def dedup_events(events: DataFrame, delay: str = "10 minutes") -> DataFrame:
-    """Exactly-once-per-event_id within the watermark — the streaming
-    face of exact dedup; state holds only in-watermark ids."""
-    return with_watermark(events).dropDuplicatesWithinWatermark(["event_id"])
 
 
 def enrich_with_users(events: DataFrame, users_cur: DataFrame) -> DataFrame:

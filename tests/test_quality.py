@@ -1959,6 +1959,35 @@ def test_ann_index_build_stats_row(spark, sf_dir):
     assert stats["codebooks"].n_rows == s._PQ_M * s._PQ_K
 
 
+def test_ann_index_build_stats_survive_the_next_build(spark, sf_dir):
+    """The returned stats are pinned, not a lazy scan of the scratch
+    directory: holding one result across the next invocation (which
+    builds into a fresh directory) must still collect the same rows."""
+    fn = REGISTRY["sim_ann_index_build"].fn
+    first = fn(spark, sf_dir)
+    second = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    assert sorted(map(tuple, first.collect())) == second
+
+
+def test_ann_index_build_and_probe_under_file_uri(spark, sf_dir, tmp_path, monkeypatch):
+    """An index path given as a ``file://`` URI builds and serves the
+    same answers as the plain path, and leaves nothing in the cwd."""
+    from go_otel_clickhouse_ingestor_spark.operators import similarity as S
+    from go_otel_clickhouse_ingestor_spark.tables import table
+
+    monkeypatch.chdir(tmp_path)
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
+    plain = str(tmp_path / "plain")
+    uri = (tmp_path / "uri").as_uri()
+    got = {}
+    for path in (plain, uri):
+        S.ann_index_build(spark, e, path)
+        got[path] = sorted(map(tuple, S.ann_index_probe(spark, path, e).collect()))
+    assert got[plain] and got[uri] == got[plain]
+    assert (tmp_path / "uri" / "codebooks" / "part-00000.parquet").is_file()
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["plain", "uri"]
+
+
 def test_mrl_zero_norm_prefix_ranks_last(spark):
     """r15 ADVICE: a zero-norm embedding PREFIX must score -inf (ranks
     last under the desc window, as the replaced JVM Divide's NULL did)

@@ -261,7 +261,9 @@ def test_session_window_merges_across_triggers_out_of_order(spark, tmp_path):
 
 def test_streaming_dedup(spark, tmp_path):
     """dropDuplicatesWithinWatermark: duplicated event_ids collapse."""
-    from go_otel_clickhouse_ingestor_spark.streaming.windows import dedup_events
+    from go_otel_clickhouse_ingestor_spark.streaming.dedup_stream import (
+        dedup_exact_stream,
+    )
 
     base = [
         {"event_id": i % 10, "ts_us": 1_700_000_000_000_000 + i * 1_000_000, "user_id": 1,
@@ -278,7 +280,7 @@ def test_streaming_dedup(spark, tmp_path):
         .drop("ts_us")
     )
     name = f"dedup_{uuid.uuid4().hex[:8]}"
-    _run_available_now(dedup_events(stream), name)
+    _run_available_now(dedup_exact_stream(stream), name)
     out = spark.sql(f"SELECT event_id FROM {name}")
     assert out.count() == 10
     assert out.distinct().count() == 10
@@ -567,11 +569,11 @@ def test_jdbc_sink_live_roundtrip_embedded_derby(spark, tmp_path):
     assert ts and all(len(r._ts) == 19 and r._ts[4] == "-" for r in ts)
 
 
-@pytest.mark.slow
-def test_stateful_running_totals_accumulate_across_batches(spark, tmp_path):
-    """applyInPandasWithState: per-user totals must carry state across
-    micro-batches (two files, one per trigger) and converge to the
-    batch groupBy."""
+def _check_running_totals(spark, tmp_path, provider):
+    """Run ``user_running_totals`` over two files, one per trigger, with
+    the session's state-store provider set to ``provider`` (None keeps
+    the default) for this query only, and check that per-user totals
+    carry across the micro-batches and converge to the batch groupBy."""
     from go_otel_clickhouse_ingestor_spark.streaming.stateful import (
         user_running_totals,
     )
@@ -589,15 +591,27 @@ def test_stateful_running_totals_accumulate_across_batches(spark, tmp_path):
         .json(str(d))
     )
     name = f"state_{uuid.uuid4().hex[:8]}"
-    q = (
-        user_running_totals(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    ckpt = tmp_path / "ckpt"
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    if provider is not None:
+        spark.conf.set(key, provider)
+    try:
+        q = (
+            user_running_totals(stream)
+            .writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", str(ckpt))
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
     out = spark.sql(f"SELECT * FROM {name}")
     # update mode emits one row per user per batch; the final row per
@@ -618,6 +632,103 @@ def test_stateful_running_totals_accumulate_across_batches(spark, tmp_path):
     assert final == want
     # statefulness: more output rows than users proves multi-batch emission
     assert out.count() > 5
+    # the query really ran on the chosen store: RocksDB leaves SST files
+    # under the checkpoint's state directory, the default store none
+    ssts = list((ckpt / "state").rglob("*.sst"))
+    assert bool(ssts) == (provider is not None)
+
+
+@pytest.mark.slow
+def test_stateful_running_totals_accumulate_across_batches(spark, tmp_path):
+    """applyInPandasWithState on the default state store."""
+    _check_running_totals(spark, tmp_path, None)
+
+
+@pytest.mark.slow
+def test_stateful_running_totals_accumulate_on_rocksdb(spark, tmp_path):
+    """The same operator on the RocksDB state store: RocksDB is a
+    provider setting, not a second stateful API."""
+    from go_otel_clickhouse_ingestor_spark.streaming.stateful import (
+        ROCKSDB_PROVIDER,
+    )
+
+    _check_running_totals(spark, tmp_path, ROCKSDB_PROVIDER)
+
+
+def _package_trees():
+    import ast
+    import pathlib
+
+    import go_otel_clickhouse_ingestor_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        yield path.relative_to(root), ast.parse(path.read_text())
+
+
+def _dotted(node) -> str:
+    """``a.b.c`` for a Name/Attribute chain, '' for anything else."""
+    import ast
+
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    if isinstance(node, ast.Name):
+        parts.append(node.id)
+        return ".".join(reversed(parts))
+    return ""
+
+
+def test_package_leaves_the_process_environment_alone():
+    """Building a session, or importing any module, must not rewrite the
+    process environment: no module writes ``os.environ``, calls
+    ``os.putenv``/``os.unsetenv``, or extends ``sys.path``."""
+    import ast
+
+    env, path = {"os.environ", "environ"}, {"sys.path"}
+    mutators = {"setdefault", "update", "pop", "popitem", "clear",
+                "append", "insert", "extend", "__setitem__", "__delitem__"}
+    found = []
+    for rel, tree in _package_trees():
+        for node in ast.walk(tree):
+            targets = []
+            if isinstance(node, (ast.Assign, ast.Delete)):
+                targets = node.targets
+            elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+                targets = [node.target]
+            for t in targets:
+                base = t.value if isinstance(t, ast.Subscript) else t
+                if _dotted(base) in env | path:
+                    found.append(f"{rel}:{node.lineno}")
+            if isinstance(node, ast.Call):
+                name = _dotted(node.func)
+                owner, _, attr = name.rpartition(".")
+                if name in {"os.putenv", "os.unsetenv"} or (
+                    owner in env | path and attr in mutators
+                ):
+                    found.append(f"{rel}:{node.lineno}")
+    assert found == []
+
+
+def test_stateful_streaming_has_one_api():
+    """Custom state has one API, ``applyInPandasWithState``: the package
+    defines no ``StatefulProcessor`` and never calls
+    ``transformWithStateInPandas``."""
+    import ast
+
+    found = []
+    for rel, tree in _package_trees():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ClassDef) and any(
+                _dotted(b).endswith("StatefulProcessor") for b in node.bases
+            ):
+                found.append(f"{rel}::{node.name}")
+            if isinstance(node, ast.Attribute) and node.attr.startswith(
+                "transformWithState"
+            ):
+                found.append(f"{rel}:{node.lineno}")
+    assert found == []
 
 
 @pytest.mark.slow
@@ -859,15 +970,11 @@ def test_matview_incremental_equals_batch_rollup(spark, events_stream, sf_dir, t
 def test_cdc_feed_batch_contract(spark):
     """The custom Python DataSource emits the exact Kafka source schema
     and the documented offset range, partition-parallel."""
-    from go_otel_clickhouse_ingestor_spark.sources.cdc_feed import (
-        CDC_FEED_SCHEMA,
-        register,
-    )
+    from go_otel_clickhouse_ingestor_spark.sources.cdc_feed import register
     from go_otel_clickhouse_ingestor_spark.streaming.cdc_stream import (
         KAFKA_SOURCE_SCHEMA,
     )
 
-    assert CDC_FEED_SCHEMA == KAFKA_SOURCE_SCHEMA  # contract lockstep
     register(spark)
     df = (
         spark.read.format("cdc_feed")
@@ -875,6 +982,7 @@ def test_cdc_feed_batch_contract(spark):
         .option("partitions", 4)
         .load()
     )
+    assert df.schema == spark.createDataFrame([], KAFKA_SOURCE_SCHEMA).schema
     rows = df.collect()
     assert len(rows) == 39
     assert sorted(r.offset for r in rows) == list(range(39))
@@ -883,7 +991,7 @@ def test_cdc_feed_batch_contract(spark):
 
 
 def test_cdc_feed_stream_availablenow(spark):
-    """Streaming read drains to max_offset in batch_size micro-batches
+    """Streaming read of one partition drains the available offsets
     and the unmodified CDC pipeline consumes it."""
     from go_otel_clickhouse_ingestor_spark.sources.cdc_feed import register
     from go_otel_clickhouse_ingestor_spark.streaming.cdc_stream import (
@@ -894,8 +1002,8 @@ def test_cdc_feed_stream_availablenow(spark):
     register(spark)
     raw = (
         spark.readStream.format("cdc_feed")
-        .option("batch_size", 17)
-        .option("max_offset", 52)
+        .option("partitions", 1)
+        .option("available", 52)
         .load()
     )
     name = f"cdc_feed_{uuid.uuid4().hex[:8]}"
@@ -920,102 +1028,6 @@ def test_cdc_feed_stream_availablenow(spark):
     assert len(out) == 48
     # double-encoded offsets survive the fallback parse
     assert {r.msg_id for r in out} >= {6, 20, 27, 34}
-
-
-@pytest.mark.slow
-def test_tws_running_totals_accumulate_across_batches(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor): same
-    semantics as the applyInPandasWithState twin — per-user totals carry
-    across micro-batches on the RocksDB state store and converge to the
-    batch aggregate.
-
-    The TWS runtime speaks protobuf between the JVM and the Python
-    state server; in containers without ``google.protobuf`` the query
-    can't start, so the runnable coverage degrades to the wiring
-    assertions in test_tws_unrunnable_still_builds below."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas needs protobuf for its state protocol",
-    )
-    from go_otel_clickhouse_ingestor_spark.streaming.stateful import (
-        ROCKSDB_PROVIDER,
-        user_running_totals_tws,
-    )
-
-    half1 = [{"user_id": i % 5, "value": float(i)} for i in range(20)]
-    half2 = [{"user_id": i % 5, "value": float(i)} for i in range(20, 40)]
-    d = tmp_path / "tws_stream"
-    d.mkdir()
-    (d / "a.json").write_text("\n".join(json.dumps(r) for r in half1))
-    (d / "b.json").write_text("\n".join(json.dumps(r) for r in half2))
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        stream = (
-            spark.readStream.schema("user_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(d))
-        )
-        name = f"tws_{uuid.uuid4().hex[:8]}"
-        q = (
-            user_running_totals_tws(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        out = spark.sql(f"SELECT * FROM {name}")
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-        final = {
-            r.user_id: (r.n_events, r.total_value)
-            for r in out.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .collect()
-        }
-        want = {
-            uid: (8, float(sum(i for i in range(40) if i % 5 == uid)))
-            for uid in range(5)
-        }
-        assert final == want
-        assert out.count() > 5
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_tws_unrunnable_still_builds(spark):
-    """Even without protobuf (which query START needs), the
-    transformWithStateInPandas plan must BUILD: correct output schema
-    and the TransformWithStateInPandas node in the analyzed plan — so
-    drift in the processor/schema wiring fails here, not only on a
-    protobuf-equipped cluster."""
-    from go_otel_clickhouse_ingestor_spark.streaming.stateful import (
-        user_running_totals_tws,
-    )
-
-    stream = spark.readStream.format("rate").load().selectExpr(
-        "value AS user_id", "cast(value AS double) AS value"
-    )
-    out = user_running_totals_tws(stream)
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == [
-        "user_id",
-        "n_events",
-        "total_value",
-    ]
-    # the analyzed-plan node is TransformWithStateInPySpark in Spark 4.1
-    assert (
-        "transformwithstateinpyspark"
-        in out._jdf.queryExecution().analyzed().toString().lower()
-    )
 
 
 def test_jsonl_sink_two_phase_commit(spark, sf_dir, tmp_path):
@@ -1374,143 +1386,9 @@ def test_stateful_holt_matches_sequential_fold(spark, tmp_path):
     assert out.count() > 2
 
 
-def test_tws_token_bucket_and_cusum_build(spark):
-    """The round-10 TWS faces (token bucket, CUSUM) must BUILD even
-    without protobuf (which only query START needs): right output
-    schema, streaming plan, and the TransformWithState node analyzed —
-    wiring drift fails here, not only on a protobuf-equipped cluster."""
-    from go_otel_clickhouse_ingestor_spark.streaming.stateful import (
-        series_cusum_stream_tws,
-        token_bucket_stream_tws,
-    )
-
-    events = spark.readStream.format("rate").load().selectExpr(
-        "value AS user_id",
-        "value AS event_id",
-        "timestamp AS ts",
-    )
-    tb = token_bucket_stream_tws(events)
-    assert tb.isStreaming
-    assert [f.name for f in tb.schema.fields] == [
-        "user_id", "event_id", "rn", "admitted", "balance_us",
-    ]
-    assert (
-        "transformwithstateinpyspark"
-        in tb._jdf.queryExecution().analyzed().toString().lower()
-    )
-
-    daily = spark.readStream.format("rate").load().selectExpr(
-        "cast(value AS string) AS series",
-        "cast(timestamp AS string) AS day",
-        "cast(value AS double) AS x",
-    )
-    cs = series_cusum_stream_tws(daily, mu=10.0, sigma=2.0)
-    assert cs.isStreaming
-    assert [f.name for f in cs.schema.fields] == [
-        "series", "day", "cusum_pos", "cusum_neg", "alarm_up", "alarm_down",
-    ]
-    assert (
-        "transformwithstateinpyspark"
-        in cs._jdf.queryExecution().analyzed().toString().lower()
-    )
-
-
-def test_tws_token_bucket_matches_batch(spark, sf_dir, tmp_path):
-    """Runnable TWS equivalence (protobuf-gated like the running-totals
-    twin): token_bucket_stream_tws across two ordered micro-batches ==
-    the batch events_token_bucket_admission replay on the same rows."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas needs protobuf for its state protocol",
-    )
-    from go_otel_clickhouse_ingestor_spark.operators.analytics import (
-        events_token_bucket_admission,
-    )
-    from go_otel_clickhouse_ingestor_spark.streaming.stateful import (
-        ROCKSDB_PROVIDER,
-        token_bucket_stream_tws,
-    )
-
-    from go_otel_clickhouse_ingestor_spark.tables import table
-
-    ev = (
-        table(spark, sf_dir, "events")
-        .orderBy("user_id", "ts", "event_id")
-        .limit(2000)
-        .collect()
-    )
-    # per-user event-time split: first half of each user's events in
-    # batch 1 — the ordered-feed contract the AIPWS twin documents
-    by_user: dict = {}
-    for r in ev:
-        by_user.setdefault(r.user_id, []).append(r)
-    rows1, rows2 = [], []
-    for urows in by_user.values():
-        mid = len(urows) // 2
-        rows1 += urows[:mid]
-        rows2 += urows[mid:]
-    d = tmp_path / "twstb_stream"
-    d.mkdir()
-    for fname, chunk in (("a.json", rows1), ("b.json", rows2)):
-        (d / fname).write_text(
-            "\n".join(
-                json.dumps(
-                    {
-                        "user_id": r.user_id,
-                        "event_id": r.event_id,
-                        "ts": r.ts.isoformat(sep=" "),
-                    }
-                )
-                for r in chunk
-            )
-        )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        stream = (
-            spark.readStream.schema("user_id long, event_id long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(d))
-        )
-        name = f"twstb_{uuid.uuid4().hex[:8]}"
-        q = (
-            token_bucket_stream_tws(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            r.event_id: (r.rn, r.admitted, r.balance_us)
-            for r in spark.table(name).collect()
-        }
-        # the 2000-row window holds each included user's EARLIEST events
-        # (sorted by user, ts, id), and the replay recurrence is
-        # prefix-deterministic — a user's rn/admitted/balance on their
-        # first k events doesn't depend on later ones — so every common
-        # event_id must agree with the full-table batch replay exactly
-        eids = {r.event_id for r in ev}
-        want = {
-            r.event_id: (r.rn, r.admitted, r.balance_us)
-            for r in events_token_bucket_admission(spark, sf_dir).collect()
-            if r.event_id in eids
-        }
-        common = set(got) & set(want)
-        assert len(common) > 100
-        mismatches = {e: (got[e], want[e]) for e in common if got[e] != want[e]}
-        assert not mismatches, dict(list(mismatches.items())[:5])
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_cdc_feed_partitioned_stream_reader(spark, tmp_path):
-    """cdc_feed_part (partition-planned DataSourceStreamReader, the
-    broker-scale rung): per-partition offset map, executor-side reads,
+    """cdc_feed's partition-planned stream reader: per-partition
+    offset map, executor-side reads,
     disjoint partition streams whose union is the single-stream corpus,
     and offsets surviving a checkpointed restart with no duplicates."""
     import json as _json
@@ -1535,7 +1413,7 @@ def test_cdc_feed_partitioned_stream_reader(spark, tmp_path):
                 for p in _g.glob(_os.path.join(sink, "*.parquet"))
             }
         raw = (
-            spark.readStream.format("cdc_feed_part")
+            spark.readStream.format("cdc_feed")
             .option("partitions", 3)
             .option("available", available)
             .load()

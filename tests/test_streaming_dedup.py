@@ -105,6 +105,27 @@ def test_stream_dedup_matches_batch_drop_duplicates(spark, tmp_path):
     assert out.count() == batch == 4
 
 
+@pytest.mark.parametrize(
+    "horizon, deliveries", [("1 minute", 2), ("30 minutes", 1)]
+)
+def test_stream_dedup_passes_redelivery_after_horizon(
+    spark, tmp_path, horizon, deliveries
+):
+    """State is bounded by the horizon: once the watermark has passed a
+    key's first sighting by more than the horizon, its entry is gone
+    and a redelivery passes through again.  Trigger 2 moves the
+    watermark to 12:10 − horizon, trigger 3 evicts with it, trigger 4
+    redelivers id 7 at 12:10 (not late under either horizon)."""
+    later = "2024-03-01 12:10:00.000000"
+    b1 = _rows([7])
+    b2 = _rows([8], ts=later)
+    b3 = _rows([9], ts=later)
+    b4 = _rows([7], ts=later)
+    out = _feed(spark, tmp_path, [b1, b2, b3, b4], horizon)
+    got = sorted(r.event_id for r in out.collect())
+    assert got == sorted([7] * deliveries + [8, 9])
+
+
 def test_near_dup_ingest_stream_matches_batch_sequence(spark, sf_dir, tmp_path):
     """The foreachBatch near-dup ingest must reproduce the batch
     maintained-index sequence EXACTLY through a real two-trigger
