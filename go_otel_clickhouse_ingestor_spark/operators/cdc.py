@@ -577,8 +577,8 @@ def cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows kept.  Classic Spark has no MERGE statement outside table
     formats; the full-outer-join rewrite IS what Delta/Iceberg compile
     MERGE to, minus their transactional file replacement — pair it
-    with dynamic partition overwrite (compact_lake_partitions) for the
-    write side.  The batch is first collapsed to ONE net change per
+    with a staged partition swap (``sinks.replace_partitions``, as the
+    streaming upsert does) for the write side.  The batch is first collapsed to ONE net change per
     key (latest by _lsn — the rule A16 pins), so the merge is
     idempotent under replay: at-least-once delivery upstream converges
     to the same snapshot.  Scale: one key-partitioned join, batch side

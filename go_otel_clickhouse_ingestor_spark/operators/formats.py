@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..streaming.sinks import replace_partitions
 from ..tables import table
 
 _COLS = ("event_id", "ts_us", "user_id", "event_type", "value")
@@ -425,22 +426,24 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-def list_partition_files(path: str, partition_col: str) -> dict[str, list[str]]:
-    """Partition-value → data-file paths for a hive-layout directory.
-    Local-filesystem walk here; on a real lake this comes from the
-    table format's manifest (Delta/Iceberg) or a LIST call."""
-    out: dict[str, list[str]] = {}
-    prefix = f"{partition_col}="
-    for entry in sorted(os.listdir(path)):
-        if not entry.startswith(prefix):
-            continue
-        pdir = os.path.join(path, entry)
-        out[entry[len(prefix):]] = sorted(
-            os.path.join(pdir, f)
-            for f in os.listdir(pdir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    return out
+def list_partition_files(path: str, partition_col: str) -> dict[str | None, list[str]]:
+    """Partition-value (``None`` for null) → data-file paths, in
+    ``path``'s own form, of a hive-layout parquet directory, listed
+    through pyarrow's filesystem for ``path``'s scheme.  On a real lake
+    this comes from the table format's manifest or a LIST call."""
+    import pyarrow as pa
+    import pyarrow.dataset as pds
+    import pyarrow.fs as pafs
+
+    fs, root = pafs.FileSystem.from_uri(path if "://" in path else os.path.abspath(path))
+    hive = pds.partitioning(pa.schema([(partition_col, pa.string())]), flavor="hive")
+    out: dict[str | None, list[str]] = {}
+    for frag in pds.dataset(root, filesystem=fs, partitioning=hive).get_fragments():
+        keys = pds.get_partition_keys(frag.partition_expression)
+        if partition_col in keys:
+            file = path.rstrip("/") + frag.path[len(root.rstrip("/")):]
+            out.setdefault(keys[partition_col], []).append(file)
+    return {v: sorted(files) for v, files in out.items()}
 
 
 def compact_lake_partitions(
@@ -458,56 +461,24 @@ def compact_lake_partitions(
     after a day a hot partition holds thousands of KB-sized files and
     scan cost is dominated by per-file open/footer overhead, not bytes.
     This pass rewrites ONLY the partitions whose file count exceeds
-    ``max_files_per_partition``, each coalesced to that many files,
-    through Spark's dynamic partition overwrite — an atomic per-
-    partition directory swap that never touches healthy partitions
-    (asserted byte-for-byte by the test).
-
-    Scale design: the partition census is manifest/LIST metadata (no
-    data IO); each rewrite reads one partition directory (partition-
-    pruned scan) into a SIBLING STAGING directory with ``coalesce(k)``
-    — no shuffle, no global job over the table, and crucially never a
-    write over the path being read (the r6 ADVICE item: the old
-    dynamic-partition self-overwrite could lose a partition if the
-    driver died mid-commit).  Only after every staged rewrite has
-    fully committed are partitions swapped in, one directory rename
-    pair each.  Failure semantics, honestly: a crash during staging
-    loses nothing (the table is untouched); a crash inside one swap's
-    two-rename window leaves that partition's old files intact at
-    ``<partition>._old`` next to the staged replacement — recoverable
-    by finishing or reversing the rename, and every other partition is
-    either fully old or fully new.  Returns
-    {partition_value: (files_before, files_after)} for the rewritten
-    partitions.  Run it off-peak; readers of a partition see either
-    the old or the new file set, never a mix."""
-    import shutil
-
+    ``max_files_per_partition``, each to at most that many files, and
+    never touches healthy partitions (asserted byte-for-byte by the
+    test).  The census is LIST metadata (no data IO); the oversplit
+    partitions are read in one scan and written with ``coalesce(k)``
+    (no shuffle) in one staged write that ``sinks.replace_partitions``
+    swaps in.  Returns {partition_value: (files_before, files_after)}
+    for the rewritten partitions.  Run it off-peak."""
     census = list_partition_files(path, partition_col)
-    victims = {
-        v: files
-        for v, files in census.items()
-        if len(files) > max_files_per_partition
-    }
+    victims = {v: files for v, files in census.items() if len(files) > max_files_per_partition}
     if not victims:
         return {}
-    staging = f"{path.rstrip('/')}__compact_staging"
-    for value in victims:
-        (
-            spark.read.parquet(path)
-            .filter(F.col(partition_col) == value)
-            .drop(partition_col)  # lives in the directory name, as partitionBy wrote it
-            .coalesce(max_files_per_partition)
-            .write.mode("overwrite")
-            .parquet(os.path.join(staging, f"{partition_col}={value}"))
-        )
-    for value in victims:
-        dst = os.path.join(path, f"{partition_col}={value}")
-        src = os.path.join(staging, f"{partition_col}={value}")
-        old = f"{dst}._old"
-        os.rename(dst, old)
-        os.rename(src, dst)
-        shutil.rmtree(old)
-    shutil.rmtree(staging, ignore_errors=True)
+    files = sum(victims.values(), [])
+    # a string partition column: an inferred one would rename "007" to "7"
+    schema = spark.read.parquet(files[0]).schema.add(partition_col, "string")
+    rows = spark.read.schema(schema).option("basePath", path).parquet(*files)
+    replace_partitions(
+        spark, rows.coalesce(max_files_per_partition), path, partition_col, list(victims)
+    )
     after = list_partition_files(path, partition_col)
     return {v: (len(victims[v]), len(after[v])) for v in victims}
 
@@ -875,29 +846,18 @@ def expire_lake_partitions(
     read — deterministic, testable, and replayable like every other
     boundary in this repo).
 
-    Failure semantics match the compactor: each expired partition is
-    renamed to ``<partition>._expired`` first (an atomic rename, after
-    which readers no longer list it) and deleted second; a crash
-    between the two leaves a recoverable tombstone directory, and
-    every other partition is untouched.  Returns
+    The drop is ``sinks.replace_partitions`` with no rows.  Returns
     {partition_value: n_files_dropped}."""
     import datetime
-    import shutil
 
     cutoff = (
         datetime.date.fromisoformat(now_day)
         - datetime.timedelta(days=ttl_days)
     ).isoformat()
     census = list_partition_files(path, partition_col)
-    expired = {v: files for v, files in census.items() if v < cutoff}
-    dropped: dict[str, int] = {}
-    for value, files in expired.items():
-        d = os.path.join(path, f"{partition_col}={value}")
-        tomb = f"{d}._expired"
-        os.rename(d, tomb)
-        shutil.rmtree(tomb)
-        dropped[value] = len(files)
-    return dropped
+    expired = {v: len(files) for v, files in census.items() if v is not None and v < cutoff}
+    replace_partitions(spark, None, path, partition_col, list(expired))
+    return expired
 
 
 @query(

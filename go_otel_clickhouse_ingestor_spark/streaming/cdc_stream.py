@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import current_state, parse_envelope, translate_envelope
-from .sinks import merge_partitions
+from .sinks import merge_partitions, replace_partitions
 
 
 def translate_stream(kafka_shaped: DataFrame) -> DataFrame:
@@ -116,13 +116,12 @@ def upsert_foreach_batch(state_dir: str):
     1. merges its rows into the ``versions/`` buckets its ids hash into
        with ``sinks.merge_partitions``, de-duplicating exact replays
        (idempotent under the at-least-once retry), then
-    2. rewrites the same ``current/`` buckets from the merged versions,
-       and drops the touched buckets left with no live id.
+    2. replaces the same ``current/`` buckets with the current state of
+       the merged versions (``sinks.replace_partitions``), which drops
+       a touched bucket left with no live id.
 
-    Versions is written before current, so a crash between the two
-    leaves a stale current that the retry of the batch recomputes.  The
-    crash window inside each overwrite is the one
-    ``sinks.merge_partitions`` documents.
+    Versions is written before current, so a retried batch also
+    recomputes a stale current.
     """
 
     def bucketed(df: DataFrame) -> DataFrame:
@@ -140,26 +139,9 @@ def upsert_foreach_batch(state_dir: str):
             )
         finally:
             batch_df.unpersist()
-        if not touched:
-            return
-        cur = bucketed(current_state(merged))
-        (
-            cur.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(state_dir + "/current")
-        )
-        # Dynamic overwrite only replaces partitions PRESENT in the
-        # written data: a touched bucket whose last live id was just
-        # deleted produces no current rows, so its stale partition is
-        # dropped explicitly, through the FileSystem of the path's
-        # scheme.  A failed delete raises, so the batch retries.
-        sc = batch_df.sparkSession.sparkContext
-        live = {r.bucket for r in cur.select("bucket").distinct().collect()}
-        for b in sorted(set(touched) - live):
-            p = sc._jvm.org.apache.hadoop.fs.Path(f"{state_dir}/current/bucket={b}")
-            fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-            if not fs.delete(p, True) and fs.exists(p):
-                raise OSError(f"could not delete stale partition {p}")
+        if touched:
+            cur = bucketed(current_state(merged))
+            spark = batch_df.sparkSession
+            replace_partitions(spark, cur, state_dir + "/current", "bucket", touched)
 
     return apply

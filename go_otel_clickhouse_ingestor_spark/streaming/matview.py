@@ -10,14 +10,13 @@ micro-batch only needs:
 1. its own partial aggregate (tiny — bounded by types × hours touched),
 2. a read of the CURRENT rows for the touched event_type partitions
    (partition-pruned scan of the view, never the event history),
-3. re-summation and a dynamic partition overwrite of just those
-   partitions.
+3. re-summation and a staged swap of just those partitions.
 
 State is O(view), not O(stream): the raw events are never re-read.
 This is the same partition merge as ``cdc_stream.upsert_foreach_batch``
-(A16), ``sinks.merge_partitions``, applied to additive aggregation; its
-crash window is documented there.  At 100 TB the view partitions by
-(event_type, day) and a batch rewrites only the slivers it touched.
+(A16), ``sinks.merge_partitions``, applied to additive aggregation.  At
+100 TB the view partitions by (event_type, day) and a batch rewrites
+only the slivers it touched.
 """
 
 from __future__ import annotations
@@ -51,10 +50,11 @@ def _resum(rows: DataFrame) -> DataFrame:
 def matview_foreach_batch(view_dir: str):
     """foreachBatch maintainer: combine each micro-batch's partial
     aggregate into the stored view with ``sinks.merge_partitions``,
-    rewriting only touched event_type partitions.  Replays of the same
-    batch are NOT idempotent for additive aggregates: a batch
-    re-delivered after its overwrite committed but before the
-    checkpoint did is counted twice."""
+    rewriting only touched event_type partitions.  A crash inside the
+    swap is rolled back before the retry (``sinks.replace_partitions``),
+    but replays are NOT idempotent for additive aggregates: a batch
+    re-delivered after its swap committed but before the checkpoint did
+    is counted twice."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         merge_partitions(hourly_rollup(batch_df), view_dir, "event_type", _resum)

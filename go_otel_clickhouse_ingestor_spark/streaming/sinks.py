@@ -1,6 +1,6 @@
 """Sinks — the reference's ClickHouse HTTP JSONEachRow sink (A11/A12)
 as micro-batched JDBC, a parquet sink for tests, and the partition
-merge every stateful foreachBatch maintainer shares.
+merge and swap behind every partition rewrite.
 
 Reference behavior being replaced: one synchronous HTTP POST *per
 row*, new http.Client per call, non-200 -> error, basic auth only when
@@ -109,6 +109,72 @@ def read_partitions(spark: SparkSession, path: str, col: str, values: list):
         return None
 
 
+def _dirs(spark: SparkSession, path: str):
+    """``path``'s Hadoop FileSystem, and ``under("a", "b")`` = ``<path>/a/b``."""
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs = Path(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    root = fs.makeQualified(Path(path))
+    return fs, lambda *names: Path(root, "/".join(names))
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"could not move {src} to {dst}")
+
+
+def _delete(fs, p) -> None:
+    if not fs.delete(p, True) and fs.exists(p):
+        raise OSError(f"could not delete {p}")
+
+
+# ``_``-prefixed: Spark's and pyarrow's partition discovery skip both.
+_STAGING, _TRASH = "_staging", "_trash"
+
+
+def _restore(fs, under) -> None:
+    """Undo a swap a crash interrupted.  While ``_staging`` exists the
+    swap has not committed, so each partition parked in ``_trash`` goes
+    back over whatever replaced it (an empty parked directory marks a
+    partition that did not exist before); then both are removed."""
+    if fs.exists(under(_TRASH)) and fs.exists(under(_STAGING)):
+        for st in fs.listStatus(under(_TRASH)):
+            parked, live = st.getPath(), under(st.getPath().getName())
+            _delete(fs, live)
+            if len(fs.listStatus(parked)):
+                _rename(fs, parked, live)
+    _delete(fs, under(_STAGING))
+    _delete(fs, under(_TRASH))
+
+
+def replace_partitions(
+    spark: SparkSession, rows: DataFrame | None, path: str, col: str, values: list
+) -> None:
+    """Replace the partitions ``col IN values`` of the parquet table at
+    ``path`` with ``rows`` (partitioned by ``col``); a value without
+    rows is dropped.  The one place that renames or deletes a partition
+    directory, named by Spark's ``getPartitionPathString``.
+
+    ``rows`` is staged in ``<path>/_staging``; per value the live
+    partition is parked in ``<path>/_trash`` and the staged one moved
+    in; deleting ``_staging`` commits.  The next call here or in
+    :func:`merge_partitions` rolls an uncommitted swap back, so a batch
+    retried after a crash reads the state from before it."""
+    fs, under = _dirs(spark, path)
+    _restore(fs, under)
+    if rows is not None:
+        rows.write.partitionBy(col).parquet(under(_STAGING).toString())
+    fs.mkdirs(under(_TRASH))
+    catalog = spark.sparkContext._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    for v in values:
+        part = catalog.getPartitionPathString(col, None if v is None else str(v))
+        fs.mkdirs(under(part))  # parked empty, it marks a partition that did not exist
+        _rename(fs, under(part), under(_TRASH, part))
+        if fs.exists(under(_STAGING, part)):
+            _rename(fs, under(_STAGING, part), under(part))
+    _delete(fs, under(_STAGING))
+    _delete(fs, under(_TRASH))
+
+
 def merge_partitions(
     delta: DataFrame, path: str, col: str, combine: Callable[[DataFrame], DataFrame]
 ) -> tuple[DataFrame, list]:
@@ -120,29 +186,15 @@ def merge_partitions(
     nothing).
 
     ``combine`` maps (existing rows ∪ delta) of the touched partitions
-    to their new contents; the result is localCheckpointed so the
-    overwrite does not read the path it writes.  The overwrite uses the
-    per-write ``partitionOverwriteMode=dynamic`` option, never the
-    session-wide conf another query may be changing.
-
-    Crash safety: a failure before the write's job commit leaves every
-    partition as it was, so the batch's retry redoes the merge.  The
-    commit itself is not atomic: per touched partition it deletes the
-    live directory and then renames the staged one into place.  A crash
-    between the two leaves that partition missing, and the retry reads
-    it as empty, so its earlier rows are lost.  A transactional
-    lake-format MERGE closes that window; the partition strategy is the
-    same."""
+    to their new contents, swapped in by :func:`replace_partitions`.
+    The staged write fills the lazy local checkpoint the caller reads."""
     touched = [r[col] for r in delta.select(col).distinct().collect()]
     if not touched:
         return delta, touched
-    existing = read_partitions(delta.sparkSession, path, col, touched)
+    spark = delta.sparkSession
+    _restore(*_dirs(spark, path))
+    existing = read_partitions(spark, path, col, touched)
     merged = delta if existing is None else existing.unionByName(delta)
-    merged = combine(merged).localCheckpoint(eager=True)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(col)
-        .parquet(path)
-    )
+    merged = combine(merged).localCheckpoint(eager=False)
+    replace_partitions(spark, merged, path, col, touched)
     return merged, touched

@@ -43,6 +43,7 @@ class Span:
     start_ns: int
     end_ns: int
     attributes: dict = field(default_factory=dict)
+    otel: object = field(default=None, repr=False, compare=False)  # mirror's OTel context
 
     @property
     def duration_ms(self) -> float:
@@ -80,7 +81,7 @@ class Tracer:
         try:  # pragma: no cover - the SDK is optional
             from opentelemetry import trace as ot
 
-            return ot.get_tracer(__name__)
+            return ot.get_tracer(__name__), ot.set_span_in_context
         except Exception:
             return None
 
@@ -88,7 +89,7 @@ class Tracer:
         self, name: str, start_ns: int, end_ns: int, parent: Span | None = None, **attributes
     ) -> Span:
         """Record one finished span with known bounds (epoch ns); a
-        ``parent`` puts it in the parent's trace, as its child."""
+        ``parent`` makes it its child, here and in the OTel mirror."""
         s = Span(
             name=name,
             trace_id=parent.trace_id if parent else uuid.uuid4().hex,
@@ -101,10 +102,12 @@ class Tracer:
         with self._lock:
             self._spans.append(s)
         if self._otel is not None:
-            os_ = self._otel.start_span(name, start_time=start_ns)
+            sdk, in_context = self._otel
+            os_ = sdk.start_span(name, context=parent and parent.otel, start_time=start_ns)
             for k, v in s.attributes.items():
                 os_.set_attribute(k, str(v))
             os_.end(end_time=end_ns)
+            s.otel = in_context(os_)
         return s
 
     def spans(self, name: str | None = None) -> list[Span]:

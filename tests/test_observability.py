@@ -5,6 +5,7 @@ endpoint (A14), histogram validity, and the runnable entry point
 from __future__ import annotations
 
 import json
+import sys
 import time
 import types
 import urllib.request
@@ -67,14 +68,16 @@ def test_tracer_records_nested_spans():
     assert {ln["name"] for ln in lines} == {"outer", "inner"}
 
 
-def test_tracer_mirrors_span_bounds_into_otel():
+def test_tracer_mirrors_span_bounds_into_otel(monkeypatch):
     """The OTel mirror carries the recorded span's own bounds, not a
-    zero-length span opened after the work ended."""
+    zero-length span opened after the work ended, and starts a child in
+    its parent's mirrored context, not as a root."""
     from go_otel_clickhouse_ingestor_spark.streaming.tracing import Tracer
 
     class FakeSdkSpan:
-        def __init__(self, name, start_time):
-            self.name, self.start_time, self.end_time, self.attrs = name, start_time, None, {}
+        def __init__(self, name, context, start_time):
+            self.name, self.context, self.start_time = name, context, start_time
+            self.end_time, self.attrs = None, {}
 
         def set_attribute(self, k, v):
             self.attrs[k] = v
@@ -86,17 +89,30 @@ def test_tracer_mirrors_span_bounds_into_otel():
         def __init__(self):
             self.started = []
 
-        def start_span(self, name, start_time=None):
-            self.started.append(FakeSdkSpan(name, start_time))
+        def start_span(self, name, context=None, start_time=None):
+            self.started.append(FakeSdkSpan(name, context, start_time))
             return self.started[-1]
 
+    sdk = FakeSdkTracer()
+    fake_trace = types.ModuleType("opentelemetry.trace")
+    fake_trace.get_tracer = lambda _name: sdk
+    fake_trace.set_span_in_context = lambda span: {"current_span": span}
+    fake_otel = types.ModuleType("opentelemetry")
+    fake_otel.trace = fake_trace
+    monkeypatch.setitem(sys.modules, "opentelemetry", fake_otel)
+    monkeypatch.setitem(sys.modules, "opentelemetry.trace", fake_trace)
+
     t = Tracer("svc")
-    t._otel = FakeSdkTracer()
     s = t.record("cdc.message", 5_000_000, 125_000_000, batch_id=3)
-    (mirrored,) = t._otel.started
+    (mirrored,) = sdk.started
     assert mirrored.name == "cdc.message"
     assert (mirrored.start_time, mirrored.end_time) == (s.start_ns, s.end_ns)
     assert mirrored.attrs["batch_id"] == "3"
+    assert mirrored.context is None
+    t.record("clickhouse.post", 6_000_000, 100_000_000, parent=s)
+    _, child = sdk.started
+    assert child.name == "clickhouse.post"
+    assert child.context == {"current_span": mirrored}
 
 
 def test_listener_emits_clickhouse_post_span_per_batch():

@@ -1169,6 +1169,65 @@ def test_ttl_expiry_drops_only_expired_partitions(spark, sf_dir, tmp_path):
     assert expire_lake_partitions(spark, path, "day", ttl, now_day) == {}
 
 
+def _lake_leftovers(tmp_path) -> set:
+    import os
+
+    return {n for n in os.listdir(tmp_path / "lake") if n.startswith("_") and n != "_SUCCESS"}
+
+
+def test_compaction_under_file_uri(spark, tmp_path):
+    """compact_lake_partitions at a ``file://`` URI: the oversplit
+    partitions (the null one too) collapse to the file budget, the
+    healthy one keeps its exact files, the rows are unchanged, and no
+    staging or parked directory is left behind."""
+    from go_otel_clickhouse_ingestor_spark.operators.formats import (
+        compact_lake_partitions,
+        list_partition_files,
+    )
+
+    lake = (tmp_path / "lake").as_uri()
+    keys = ["a", "b", None]
+    rows = spark.createDataFrame([(i, keys[i % 3]) for i in range(60)], "id long, k string")
+    oversplit = F.col("k").isNull() | (F.col("k") == "a")
+    rows.filter(oversplit).repartition(8).write.partitionBy("k").parquet(lake)
+    rows.filter(~oversplit).coalesce(1).write.mode("append").partitionBy("k").parquet(lake)
+    before = list_partition_files(lake, "k")
+    assert len(before["a"]) > 2 and len(before[None]) > 2 and len(before["b"]) == 1
+    want = sorted(map(tuple, spark.read.parquet(lake).collect()), key=str)
+
+    result = compact_lake_partitions(spark, lake, "k", max_files_per_partition=2)
+    assert set(result) == {"a", None}
+    assert all(nb > 2 >= na for nb, na in result.values())
+    after = list_partition_files(lake, "k")
+    assert after["b"] == before["b"]
+    assert sorted(map(tuple, spark.read.parquet(lake).collect()), key=str) == want
+    assert _lake_leftovers(tmp_path) == set()
+
+
+def test_ttl_expiry_under_file_uri(spark, tmp_path):
+    """expire_lake_partitions at a ``file://`` URI drops exactly the
+    partitions before the cutoff, keeps the others' files, and a second
+    sweep drops nothing."""
+    from go_otel_clickhouse_ingestor_spark.operators.formats import (
+        expire_lake_partitions,
+        list_partition_files,
+    )
+
+    lake = (tmp_path / "lake").as_uri()
+    days = [f"2024-01-0{d}" for d in range(1, 7)]
+    spark.createDataFrame(
+        [(i, days[i % 6]) for i in range(24)], "id long, day string"
+    ).write.partitionBy("day").parquet(lake)
+    before = list_partition_files(lake, "day")
+
+    dropped = expire_lake_partitions(spark, lake, "day", 3, "2024-01-06")  # cutoff 01-03
+    assert dropped == {d: len(before[d]) for d in days[:2]}
+    assert list_partition_files(lake, "day") == {d: before[d] for d in days[2:]}
+    assert spark.read.parquet(lake).count() == 16
+    assert _lake_leftovers(tmp_path) == set()
+    assert expire_lake_partitions(spark, lake, "day", 3, "2024-01-06") == {}
+
+
 def test_lttb_structural_contract(spark, sf_dir):
     """LTTB downsample: exactly n_out ordered points, endpoints
     pinned to the true series endpoints, strictly increasing day

@@ -1,10 +1,15 @@
-"""The partition merge the stateful foreachBatch maintainers share
-(streaming/sinks.py ``read_partitions`` / ``merge_partitions``), and a
-guard on the Spark jobs one warm apply of each maintainer launches."""
+"""The partition merge and swap the stateful foreachBatch maintainers
+and lake maintenance share (streaming/sinks.py ``read_partitions`` /
+``merge_partitions`` / ``replace_partitions``), a guard that nothing
+else rewrites a partition directory, and a guard on the Spark jobs one
+warm apply of each maintainer launches."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
+import pathlib
+import re
 
 import pytest
 from pyspark.errors import AnalysisException
@@ -78,9 +83,9 @@ def _jobs(spark, group: str, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-# Jobs one warm apply launched on these inputs when each maintainer
-# still carried its own copy of the merge.  A cheaper apply lowers them.
-_MAX_JOBS = {"upsert": 10, "matview": 7, "join": 15}
+# Jobs one warm apply launches on these inputs since the merge swaps
+# staged partitions in.  A cheaper apply lowers them.
+_MAX_JOBS = {"upsert": 7, "matview": 6, "join": 12}
 
 
 @pytest.mark.parametrize("maintainer", sorted(_MAX_JOBS))
@@ -132,3 +137,36 @@ def test_warm_apply_launches_no_more_spark_jobs(spark, tmp_path, maintainer):
     apply_batch(batches[0], 0)
     n = _jobs(spark, f"warm-{maintainer}-{tmp_path.name}", lambda: apply_batch(batches[1], 1))
     assert n <= _MAX_JOBS[maintainer], f"{maintainer}: {n} jobs"
+
+
+def test_only_replace_partitions_rewrites_partition_directories():
+    """One partition-swap path: no dynamic partition overwrite, no
+    ``os.rename``, no hand-formatted ``col=value`` path, and only
+    ``streaming/sinks.py`` reaches a Hadoop FileSystem."""
+    import go_otel_clickhouse_ingestor_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    f_path = re.compile(r"(?:^|/|\{\})\w*=(?:\{\}|$)")  # f"{col}={v}", f".../bucket={b}"
+    c_path = re.compile(r"(?:^|/)\w*=(?:\{\w*\}|%[sd])")  # "bucket={}", "%s=%s"
+    found = []
+    for py in sorted(root.rglob("*.py")):
+        rel, src = py.relative_to(root).as_posix(), py.read_text()
+        if "partitionOverwriteMode" in src:
+            found.append((rel, "partitionOverwriteMode"))
+        tree = ast.parse(src)
+        in_fstr = {id(v) for n in ast.walk(tree) if isinstance(n, ast.JoinedStr) for v in n.values}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
+                if (n.value.id, n.attr) == ("os", "rename"):
+                    found.append((rel, n.lineno, "os.rename"))
+            if isinstance(n, ast.Attribute) and n.attr == "getFileSystem":
+                if rel != "streaming/sinks.py":
+                    found.append((rel, n.lineno, "Hadoop FileSystem"))
+            if isinstance(n, ast.JoinedStr):
+                t = "".join(v.value if isinstance(v, ast.Constant) else "{}" for v in n.values)
+                if any(f_path.search(line) for line in t.splitlines()):
+                    found.append((rel, n.lineno, t))
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in in_fstr:
+                if any(c_path.search(line) for line in n.value.splitlines()):
+                    found.append((rel, n.lineno, n.value))
+    assert found == []
