@@ -81,9 +81,7 @@ _STRICT_JSON = {
 _JSON_WS = " \t\n\r"
 
 
-def parse_envelope(
-    df: DataFrame, value_col: str = "value", schema: str = ENVELOPE_SCHEMA
-) -> DataFrame:
+def parse_envelope(df: DataFrame, schema: str = ENVELOPE_SCHEMA) -> DataFrame:
     """Attach ``env`` (the envelope parsed with ``schema``, plus
     :data:`CORRUPT_FIELD`) and ``parse_ok``, with one ``from_json`` per
     message.
@@ -96,7 +94,7 @@ def parse_envelope(
     fields fit ``schema`` (scalars, arrays, ``null``, a third level of
     quoting, type mismatches and garbage all fail).  Trailing bytes
     after the object are not detected (see the module docstring)."""
-    value = F.col(value_col)
+    value = F.col("value")
     quoted = F.ltrim(value, F.lit(_JSON_WS)).startswith('"')
     text = F.when(quoted, F.get_json_object(value, "$")).otherwise(value)
     env = F.from_json(text, f"{schema}, {CORRUPT_FIELD} string", _STRICT_JSON)
@@ -117,7 +115,7 @@ def rows_where(df: DataFrame, keep: Column, *cols) -> DataFrame:
     return df.select(F.inline(F.when(keep, F.array(F.struct(*cols)))))
 
 
-def translate_envelope(df: DataFrame, key_col: str = "key") -> DataFrame:
+def translate_envelope(df: DataFrame) -> DataFrame:
     """Envelope -> ``users_cur`` row (cdc.go:100-143), dropping rows the
     reference drops.  Input needs ``env`` + ``parse_ok`` from
     :func:`parse_envelope`."""
@@ -127,7 +125,7 @@ def translate_envelope(df: DataFrame, key_col: str = "key") -> DataFrame:
     before = env.getField("before")
 
     key_id = F.coalesce(
-        F.from_json(F.col(key_col), "id long").getField("id"), F.lit(0)
+        F.from_json(F.col("key"), "id long").getField("id"), F.lit(0)
     )
     # cdc.go:127: before != nil && before.ID != 0; a missing id field is
     # Go's zero value, so coalesce(before.id, 0) != 0 covers both.

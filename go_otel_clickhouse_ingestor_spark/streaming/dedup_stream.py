@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
 #: Default redelivery horizon: how stale a duplicate can be and still
@@ -128,8 +129,14 @@ def near_dup_ingest_batch(index_path: str, decisions_path: str):
                 .filter(F.col("batch_id") == batch_id)
                 .take(1)
             )
-        except Exception:
-            done = []  # first ever batch: no decisions table yet
+        except AnalysisException as exc:
+            # no decisions committed yet: no table, or only the
+            # _temporary of a first write that crashed.  Anything else
+            # (IO, a corrupt file) fails the batch: re-probing a
+            # redelivered one would self-match its own bands.
+            if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                raise
+            done = []
         if done:
             # redelivery after a crash between decision write and
             # index append: decisions stand, only the (matching-

@@ -20,16 +20,17 @@ multi-table topology the reference's envelope already uses,
 ``cdc.go``'s table routing).  Scale discipline:
 
 - both accumulated sides land PARTITIONED BY a custkey bucket;
-- each batch reads the other side pruned to the buckets its delta
-  actually touches (partition pruning does the work — the history is
-  never scanned whole);
+- each batch reads the other side's bucket directories its delta
+  actually touches, and no others (the history is never listed or
+  scanned whole);
 - state is O(inputs) in the LAKE (the two base tables), zero executor
   state — same argument as the near-dup index's foreachBatch face:
   this state must outlive the query and serve batch readers anyway.
 
 Delivery: at-least-once.  The accumulated sides are read with
-``sinks.read_partitions`` (the scan behind ``sinks.merge_partitions``),
-but the view and both sides only APPEND, so a batch replayed after a
+``sinks.read_partitions`` (the read behind ``sinks.merge_partitions``:
+only the touched bucket directories, with the delta's schema), but the
+view and both sides only APPEND, so a batch replayed after a
 crash between its appends can duplicate rows.  The pytest
 contract checks the maintained view row-equals the batch join of the
 full inputs after a multi-trigger run
@@ -61,13 +62,12 @@ def join_matview_foreach_batch(state_dir: str):
       side='b': (c_custkey, c_name, c_mktsegment)
 
     Per batch: split the delta, apply the three delta-rule joins with
-    the OTHER side's accumulated table read bucket-pruned to the
-    delta's touched buckets, append ΔV to ``view/`` and the deltas to
+    the OTHER side's accumulated table read in the delta's touched
+    buckets only, append ΔV to ``view/`` and the deltas to
     their acc tables (ordering: view first, so a replayed batch can
     never join against its own half-appended state)."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         key = F.when(F.col("side") == "a", F.col("o_custkey")).otherwise(F.col("c_custkey"))
         # the delta is read 3×; one checkpoint and one bucket collect
         # serve both sides
@@ -81,14 +81,14 @@ def join_matview_foreach_batch(state_dir: str):
         db = delta.filter(F.col("side") == "b").select(
             "c_custkey", "c_name", "c_mktsegment", "bucket"
         )
-        # bucket prune: the history side is scanned ONLY in the
-        # partitions the delta touches (a literal list bounded by
-        # N_BUCKETS, not by the batch)
+        # the history side is read ONLY in the bucket directories the
+        # delta touches (a list bounded by N_BUCKETS, not by the batch),
+        # with the schema its own delta is appended with
         b_old = a_old = None
         if a_buckets:
-            b_old = read_partitions(spark, f"{state_dir}/b_acc", "bucket", a_buckets)
+            b_old = read_partitions(db, f"{state_dir}/b_acc", "bucket", a_buckets)
         if b_buckets:
-            a_old = read_partitions(spark, f"{state_dir}/a_acc", "bucket", b_buckets)
+            a_old = read_partitions(da, f"{state_dir}/a_acc", "bucket", b_buckets)
 
         on = F.col("o_custkey") == F.col("c_custkey")
         cols = [

@@ -8,8 +8,9 @@ The maintained view is the hourly event rollup (the batch twin is
 micro-batch only needs:
 
 1. its own partial aggregate (tiny — bounded by types × hours touched),
-2. a read of the CURRENT rows for the touched event_type partitions
-   (partition-pruned scan of the view, never the event history),
+2. a read of the CURRENT rows of the touched event_type partitions
+   (only their directories, with the partial aggregate's schema —
+   never the rest of the view or the event history),
 3. re-summation and a staged swap of just those partitions.
 
 State is O(view), not O(stream): the raw events are never re-read.

@@ -13,11 +13,8 @@ delivery than the reference's log-and-drop (``cdc.go:76-80``).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import reduce
-
 from typing import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -91,30 +88,21 @@ def parquet_foreach_batch(path: str):
     return apply
 
 
-def read_partitions(spark: SparkSession, path: str, col: str, values: list):
-    """The partitions ``col IN values`` of the parquet table at ``path``
-    (a partition-pruned scan), or ``None`` while the table does not
-    exist yet.  Only the missing-path case means "no prior state": any
-    other failure (transient IO, corrupt footer, schema drift) raises,
-    so Structured Streaming retries the batch instead of a caller
-    overwriting the partitions with the batch's rows alone."""
-    # null-safe: a null value is the __HIVE_DEFAULT_PARTITION__ partition
-    keep = reduce(lambda acc, v: acc | F.col(col).eqNullSafe(v), values, F.lit(False))
-    try:
-        return spark.read.parquet(path).filter(keep)
-    except AnalysisException as exc:
-        cls = exc.getCondition() or ""
-        if "PATH_NOT_FOUND" not in cls and "UNABLE_TO_INFER_SCHEMA" not in cls:
-            raise
-        return None
-
-
-def _dirs(spark: SparkSession, path: str):
-    """``path``'s Hadoop FileSystem, and ``under("a", "b")`` = ``<path>/a/b``."""
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+def _dirs(spark: SparkSession, path: str, col: str):
+    """``path``'s Hadoop FileSystem; ``under("a", "b")`` = ``<path>/a/b``
+    (``under()`` = ``<path>``); and ``part(v)``, the directory name of
+    partition ``col = v`` as Spark's writer names it
+    (``getPartitionPathString``; a null is ``__HIVE_DEFAULT_PARTITION__``)."""
+    jvm = spark.sparkContext._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
     fs = Path(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     root = fs.makeQualified(Path(path))
-    return fs, lambda *names: Path(root, "/".join(names))
+    name = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
+    return (
+        fs,
+        lambda *names: Path(root, "/".join(names)) if names else root,
+        lambda v: name(col, None if v is None else str(v)),
+    )
 
 
 def _rename(fs, src, dst) -> None:
@@ -146,6 +134,53 @@ def _restore(fs, under) -> None:
     _delete(fs, under(_TRASH))
 
 
+def _check_columns(spark: SparkSession, fs, part, names: list[str]) -> None:
+    """Raise unless the first data file in the partition directory
+    ``part`` stores exactly the columns ``names``, read from its parquet
+    footer on the driver."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    parquet = spark.sparkContext._jvm.org.apache.parquet.hadoop
+    for st in fs.listStatus(part):
+        if st.getPath().getName().startswith(("_", ".")):
+            continue  # _SUCCESS, .crc checksums
+        reader = parquet.ParquetFileReader.open(parquet.util.HadoopInputFile.fromStatus(st, conf))
+        try:
+            stored = [f.getName() for f in reader.getFileMetaData().getSchema().getFields()]
+        finally:
+            reader.close()
+        if sorted(stored) != sorted(names):
+            raise ValueError(f"{part} stores columns {stored}, the writer has {names}")
+        return
+
+
+def read_partitions(rows: DataFrame, path: str, col: str, values: list) -> DataFrame | None:
+    """The stored partitions ``col IN values`` of the parquet table at
+    ``path``, read with the schema of ``rows``, the frame being written
+    into it; ``None`` when none of them exists.
+
+    An interrupted swap is rolled back first.  Each value's directory is
+    named as :func:`replace_partitions` names it and kept if it exists;
+    only those directories are listed and read (with ``basePath``), so
+    the read costs O(touched partitions), and no schema is inferred: a
+    partition value reads back with ``rows``' type (``"007"`` stays a
+    string).  One stored file whose columns differ from ``rows``' (its
+    footer is checked on the driver) raises, as does any failure to
+    read, so Structured Streaming retries the batch instead of a caller
+    overwriting the partitions with the batch's rows alone."""
+    spark = rows.sparkSession
+    fs, under, part = _dirs(spark, path, col)
+    _restore(fs, under)
+    dirs = [d for d in (under(part(v)) for v in values) if fs.exists(d)]
+    if not dirs:
+        return None
+    _check_columns(spark, fs, dirs[0], [c for c in rows.columns if c != col])
+    return (
+        spark.read.schema(rows.schema)
+        .option("basePath", under().toString())
+        .parquet(*(d.toString() for d in dirs))
+    )
+
+
 def replace_partitions(
     spark: SparkSession, rows: DataFrame | None, path: str, col: str, values: list
 ) -> None:
@@ -157,22 +192,25 @@ def replace_partitions(
     ``rows`` is staged in ``<path>/_staging``; per value the live
     partition is parked in ``<path>/_trash`` and the staged one moved
     in; deleting ``_staging`` commits.  The next call here or in
-    :func:`merge_partitions` rolls an uncommitted swap back, so a batch
+    :func:`read_partitions` rolls an uncommitted swap back, so a batch
     retried after a crash reads the state from before it."""
-    fs, under = _dirs(spark, path)
+    fs, under, part = _dirs(spark, path, col)
     _restore(fs, under)
+    staged = {}
     if rows is not None:
         rows.write.partitionBy(col).parquet(under(_STAGING).toString())
-    fs.mkdirs(under(_TRASH))
-    catalog = spark.sparkContext._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        staged = {p.getName(): p for p in (st.getPath() for st in fs.listStatus(under(_STAGING)))}
+    trash = under(_TRASH)
+    fs.mkdirs(trash)
     for v in values:
-        part = catalog.getPartitionPathString(col, None if v is None else str(v))
-        fs.mkdirs(under(part))  # parked empty, it marks a partition that did not exist
-        _rename(fs, under(part), under(_TRASH, part))
-        if fs.exists(under(_STAGING, part)):
-            _rename(fs, under(_STAGING, part), under(part))
+        name = part(v)
+        live = under(name)
+        fs.mkdirs(live)  # parked empty, it marks a partition that did not exist
+        _rename(fs, live, under(_TRASH, name))
+        if name in staged:
+            _rename(fs, staged[name], live)
     _delete(fs, under(_STAGING))
-    _delete(fs, under(_TRASH))
+    _delete(fs, trash)
 
 
 def merge_partitions(
@@ -180,21 +218,20 @@ def merge_partitions(
 ) -> tuple[DataFrame, list]:
     """Merge ``delta`` into the parquet table at ``path``, partitioned by
     ``col``, rewriting only the partitions ``delta`` touches — a poor
-    man's ``MERGE INTO``; untouched partitions are never read or
+    man's ``MERGE INTO``; untouched partitions are never listed, read or
     written.  Returns the merged rows of the touched partitions and the
     touched ``col`` values (``[]`` for an empty delta, which writes
     nothing).
 
-    ``combine`` maps (existing rows ∪ delta) of the touched partitions
-    to their new contents, swapped in by :func:`replace_partitions`.
-    The staged write fills the lazy local checkpoint the caller reads."""
+    The touched partitions are read by :func:`read_partitions` with
+    ``delta``'s schema; ``combine`` maps (their rows ∪ delta) to their
+    new contents, swapped in by :func:`replace_partitions`.  The staged
+    write fills the lazy local checkpoint the caller reads."""
     touched = [r[col] for r in delta.select(col).distinct().collect()]
     if not touched:
         return delta, touched
-    spark = delta.sparkSession
-    _restore(*_dirs(spark, path))
-    existing = read_partitions(spark, path, col, touched)
+    existing = read_partitions(delta, path, col, touched)
     merged = delta if existing is None else existing.unionByName(delta)
     merged = combine(merged).localCheckpoint(eager=False)
-    replace_partitions(spark, merged, path, col, touched)
+    replace_partitions(delta.sparkSession, merged, path, col, touched)
     return merged, touched

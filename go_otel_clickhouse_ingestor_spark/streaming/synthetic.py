@@ -40,14 +40,14 @@ def event_columns(tick_value: Column, tick_ts: Column) -> list[Column]:
     ]
 
 
-def synthetic_events(spark: SparkSession, rate: int = 5, num_partitions: int = 1) -> DataFrame:
+def synthetic_events(spark: SparkSession, rate: int = 5) -> DataFrame:
     """Streaming DataFrame of synthetic events at ``rate`` events/sec
     (reference default 5/s, ``cmd/root.go:65``).  Stop-after-duration
     is the caller's ``query.stop()`` — mirroring ``cmd/root.go:119-124``."""
     ticks = (
         spark.readStream.format("rate")
         .option("rowsPerSecond", rate)
-        .option("numPartitions", num_partitions)
+        .option("numPartitions", 1)
         .load()
     )
     return ticks.select(*event_columns(F.col("value"), F.col("timestamp")))

@@ -393,7 +393,7 @@ def test_upsert_incremental_rewrites_only_touched_buckets(spark, tmp_path):
 @pytest.mark.parametrize("uri", [False, True], ids=["path", "file_uri"])
 def test_upsert_deleting_last_live_id_empties_its_current_bucket(spark, tmp_path, uri):
     """A batch that deletes the only live id of a bucket must drop that
-    bucket from ``current/`` (dynamic overwrite alone keeps it), also
+    bucket from ``current/`` (a swap with no staged rows for it), also
     when the state dir is a URI rather than a plain path."""
     from go_otel_clickhouse_ingestor_spark.operators.cdc import (
         parse_envelope,

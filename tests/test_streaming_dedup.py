@@ -277,3 +277,38 @@ def test_near_dup_ingest_redelivery_is_effectively_once(spark, sf_dir, tmp_path)
         for r in spark.read.parquet(dec).filter("batch_id = 1").collect()
     }
     assert dec2 == ref2_rows
+
+
+@pytest.mark.parametrize("leftover", ["garbage_file", "crashed_first_write"])
+def test_near_dup_batch_guard_treats_only_a_missing_table_as_no_decisions(
+    spark, tmp_path, leftover
+):
+    """The batch-id guard may read "no decisions yet" only from a
+    decisions table with no committed file.  Any other read failure (a
+    corrupt file here) fails the batch: re-probing a redelivered batch
+    against an index that holds its own bands would self-match."""
+    from go_otel_clickhouse_ingestor_spark.operators.dedup import (
+        _near_sigs,
+        materialized,
+        near_index_write,
+    )
+    from go_otel_clickhouse_ingestor_spark.streaming.dedup_stream import (
+        near_dup_ingest_batch,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "pack my box with five dozen liquor jugs")],
+        "doc_id long, text string",
+    )
+    idx, dec = str(tmp_path / "idx"), tmp_path / "dec"
+    near_index_write(materialized(_near_sigs(docs)), idx)
+    if leftover == "garbage_file":
+        dec.mkdir()
+        (dec / "part-00000.snappy.parquet").write_bytes(b"not a parquet file")
+        with pytest.raises(Exception):
+            near_dup_ingest_batch(idx, str(dec))(docs, 0)
+    else:
+        (dec / "_temporary" / "0").mkdir(parents=True)
+        near_dup_ingest_batch(idx, str(dec))(docs, 0)
+        assert sorted(r.doc_id for r in spark.read.parquet(str(dec)).collect()) == [1, 2]

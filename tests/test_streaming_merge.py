@@ -12,7 +12,6 @@ import pathlib
 import re
 
 import pytest
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -23,18 +22,36 @@ from go_otel_clickhouse_ingestor_spark.streaming.sinks import (
 
 
 def test_read_partitions_is_none_only_for_a_missing_table(spark, tmp_path):
-    path = str(tmp_path / "t")
-    assert read_partitions(spark, path, "p", [1]) is None
+    """``None`` means no touched partition is stored; a touched partition
+    that cannot be read raises instead."""
+    path = tmp_path / "t"
     table = spark.createDataFrame([(1, "a"), (2, "b")], "p long, v string")
-    table.write.partitionBy("p").parquet(path)
-    assert [r.v for r in read_partitions(spark, path, "p", [2]).collect()] == ["b"]
-    with pytest.raises(AnalysisException):
-        read_partitions(spark, path, "no_such_col", [1])
+    assert read_partitions(table, str(path), "p", [1]) is None
+    table.write.partitionBy("p").parquet(str(path))
+    assert read_partitions(table, str(path), "p", [3, 4]) is None
+    assert [r.v for r in read_partitions(table, str(path), "p", [2, 3]).collect()] == ["b"]
+    (path / "p=1" / "part-00000.snappy.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        read_partitions(table, str(path), "p", [1]).collect()
+
+
+def test_merge_partitions_raises_on_stored_columns_unlike_the_writers(spark, tmp_path):
+    """A stored partition with a column the writer lacks fails the batch
+    rather than merging rows of two shapes."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, 10, "x")], "p long, v long, extra string").write.partitionBy(
+        "p"
+    ).parquet(path)
+    with pytest.raises(ValueError, match="extra"):
+        merge_partitions(
+            spark.createDataFrame([(1, 11)], "p long, v long"), path, "p", DataFrame.dropDuplicates
+        )
 
 
 def test_merge_partitions_ignores_a_static_session_overwrite_mode(spark, tmp_path):
-    """The overwrite is dynamic per write: a session left in ``static``
-    mode (say by another query) must not wipe untouched partitions."""
+    """The merge swaps staged partitions in rather than overwriting: a
+    session left in ``static`` overwrite mode (say by another query)
+    must not wipe untouched partitions."""
     path = str(tmp_path / "t")
 
     def rows(*r):
@@ -54,23 +71,33 @@ def test_merge_partitions_ignores_a_static_session_overwrite_mode(spark, tmp_pat
 
 
 def test_matview_merges_into_a_null_event_type_partition(spark, tmp_path):
-    """A null partition value is stored as __HIVE_DEFAULT_PARTITION__:
-    the merge must read that partition back, not overwrite it with the
-    batch's rows alone."""
+    """A null partition value is stored as __HIVE_DEFAULT_PARTITION__,
+    and a view whose other values are ``"007"`` / ``"1.50"`` would read
+    back as doubles if the type were inferred from the directory names:
+    the merge must read each partition back as the string it wrote, not
+    overwrite it with the batch's rows alone."""
     from go_otel_clickhouse_ingestor_spark.streaming.matview import matview_foreach_batch
 
     t0 = dt.datetime(2024, 1, 1)
-    batch = spark.createDataFrame(
-        [(None, t0, 1.0), ("x", t0, 2.0)], "event_type string, ts timestamp, value double"
-    )
-    view = str(tmp_path / "view")
-    apply_batch = matview_foreach_batch(view)
-    apply_batch(batch, 0)
-    apply_batch(batch, 1)
-    got = sorted(
-        (r.event_type or "", r.n, r.total_value) for r in spark.read.parquet(view).collect()
-    )
-    assert got == [("", 2, 2.0), ("x", 2, 4.0)]
+    stored = "bucket_us long, n long, total_value double, event_type string"
+    cases = [
+        ([(None, 1.0), ("x", 2.0)], [("", 2, 2.0), ("x", 2, 4.0)]),
+        ([(None, 1.0), ("007", 3.0), ("1.50", 4.0)],
+         [("", 2, 2.0), ("007", 2, 6.0), ("1.50", 2, 8.0)]),
+    ]
+    for i, (rows, want) in enumerate(cases):
+        batch = spark.createDataFrame(
+            [(t, t0, v) for t, v in rows], "event_type string, ts timestamp, value double"
+        )
+        view = str(tmp_path / f"view{i}")
+        apply_batch = matview_foreach_batch(view)
+        apply_batch(batch, 0)
+        apply_batch(batch, 1)
+        got = sorted(
+            (r.event_type or "", r.n, r.total_value)
+            for r in spark.read.schema(stored).parquet(view).collect()
+        )
+        assert got == want
 
 
 def _jobs(spark, group: str, fn) -> int:
@@ -83,9 +110,10 @@ def _jobs(spark, group: str, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-# Jobs one warm apply launches on these inputs since the merge swaps
-# staged partitions in.  A cheaper apply lowers them.
-_MAX_JOBS = {"upsert": 7, "matview": 6, "join": 12}
+# Jobs one warm apply launches on these inputs since the merge reads
+# only the touched partition directories, with the writer's schema (no
+# schema-inference job).  A cheaper apply lowers them.
+_MAX_JOBS = {"upsert": 5, "matview": 5, "join": 10}
 
 
 @pytest.mark.parametrize("maintainer", sorted(_MAX_JOBS))
@@ -139,10 +167,15 @@ def test_warm_apply_launches_no_more_spark_jobs(spark, tmp_path, maintainer):
     assert n <= _MAX_JOBS[maintainer], f"{maintainer}: {n} jobs"
 
 
+#: JVM entry points only streaming/sinks.py may call.
+_SINKS_ONLY = ("getFileSystem", "getPartitionPathString")
+
+
 def test_only_replace_partitions_rewrites_partition_directories():
     """One partition-swap path: no dynamic partition overwrite, no
     ``os.rename``, no hand-formatted ``col=value`` path, and only
-    ``streaming/sinks.py`` reaches a Hadoop FileSystem."""
+    ``streaming/sinks.py`` reaches a Hadoop FileSystem or names a
+    partition directory."""
     import go_otel_clickhouse_ingestor_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
@@ -159,9 +192,9 @@ def test_only_replace_partitions_rewrites_partition_directories():
             if isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
                 if (n.value.id, n.attr) == ("os", "rename"):
                     found.append((rel, n.lineno, "os.rename"))
-            if isinstance(n, ast.Attribute) and n.attr == "getFileSystem":
+            if isinstance(n, ast.Attribute) and n.attr in _SINKS_ONLY:
                 if rel != "streaming/sinks.py":
-                    found.append((rel, n.lineno, "Hadoop FileSystem"))
+                    found.append((rel, n.lineno, n.attr))
             if isinstance(n, ast.JoinedStr):
                 t = "".join(v.value if isinstance(v, ast.Constant) else "{}" for v in n.values)
                 if any(f_path.search(line) for line in t.splitlines()):
